@@ -15,6 +15,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..engine.clean import clean_html
 from ..engine.rules import DEFAULT_RULES, RuleConfig
@@ -36,10 +37,11 @@ RESULT_DDL = (
 
 def _slice_by_bytes(batch: pa.RecordBatch, html_idx: int,
                     max_batch_bytes: int) -> Iterator[pa.RecordBatch]:
-    """Split a record batch so each slice's html payload fits the budget."""
-    sizes = [
-        (len(v.as_py() or b"")) for v in batch.column(html_idx)
-    ]
+    """Split a record batch so each slice's html payload fits the budget.
+
+    Sizes come from the binary column's offsets, without copying a value
+    into Python."""
+    sizes = pc.binary_length(batch.column(html_idx)).fill_null(0).to_pylist()
     start = 0
     acc = 0
     for i, s in enumerate(sizes):
@@ -68,6 +70,7 @@ def make_cascade_fn(rules: RuleConfig = DEFAULT_RULES,
             html_idx = names.index("html")
             for chunk in _slice_by_bytes(batch, html_idx, max_batch_bytes):
                 texts, errors, b_in, b_out, fired = [], [], [], [], []
+                # one document's bytes in Python at a time, not the chunk's
                 for v in chunk.column(html_idx):
                     res = clean_html(v.as_py() or b"", cfg)
                     texts.append(res.text)

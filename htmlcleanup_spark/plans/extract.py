@@ -2,10 +2,11 @@
 
 Reference lifecycle (one doc: cleanup_msfp.py:35-302) becomes, per the north
 rule: Iceberg/parquet scan -> resume anti-join -> per-url dedup window ->
-salted size-bucket repartition -> Arrow-batched cascade -> observe counters
+round-robin repartition -> Arrow-batched cascade -> observe counters
 -> MERGE/append + per-partition lineage manifest.
 
-Scale notes (designed for 10^12 docs / 1000 executors, tested on local[32]):
+Scale notes (designed for 10^12 docs / 1000 executors, tested on local[4]
+and local[32]):
 
 - column pruning: only (url, warc_ts, html, lang) are selected before the
   UDF stage; Catalyst pushes the projection into the scan.
@@ -20,12 +21,19 @@ Scale notes (designed for 10^12 docs / 1000 executors, tested on local[32]):
   them — each retry appends another attempt row for that url, so readers
   of the parquet fallback take the last attempt per url (the Iceberg MERGE
   path upserts and has no such duplicates).
-- dedup: keep the newest warc_ts per url.  This shuffles by url once; the
-  subsequent repartition reuses the rows already clustered by url-hash.
-- skew: `size_bucket = floor(log2(octet_length(html)))` + a url-hash salt
-  spread giant pages across partitions; AQE skew-join handling stays on as a
-  backstop.  Without this, one partition holding several 0.5 MB docs becomes
-  the straggler that caps scaling efficiency.
+- dedup: keep the newest warc_ts per url.  This shuffles by url once.
+- cascade partitioning: every Python task pays a fixed set-up cost before
+  its first batch, whatever its input size — about 0.2 s on PySpark 4.1.2
+  / Python 3.11, mostly ``importlib.invalidate_caches()`` re-reading the
+  pyspark.zip directory once per zipimporter.  The default is therefore two
+  cascade tasks per core, one ``repartition(2 * defaultParallelism)``:
+  enough that one slow task does not leave a core idle for the rest of
+  the stage, few enough that set-up stays a small share of it.  The
+  former separate class for big pages is gone: at this task count it ran
+  no faster (numbers in :func:`partition_for_cascade`).  The default
+  ignores input size: at cluster scale two tasks per core make each task
+  hours long, and a lost executor re-runs all of them, so callers still
+  pass ``num_partitions`` there.
 - the cascade is stateless per document: no shuffle after repartition, the
   map and the write pipeline fuse into one stage.
 """
@@ -69,31 +77,74 @@ def size_bucket_salt(pages: DataFrame, salts: int = 64) -> DataFrame:
     ).withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(salts)))
 
 
-# docs >= 2^17 bytes (128 KB) go to the dedicated big-doc partition class
-_BIG_BUCKET = 17
-
-
 def partition_for_cascade(pages: DataFrame, num_partitions: int) -> DataFrame:
-    """Byte-balanced, straggler-resistant partitioning for the cascade.
+    """Spread the pages over ``num_partitions`` cascade tasks, round-robin.
 
-    Hashing (size_bucket, salt) leaves a balls-into-bins tail: a partition
-    unlucky enough to receive two heavy cells runs 2-3x the median and caps
-    scaling efficiency.  Instead, split the corpus into a big-doc class
-    (>=128 KB, ~1% of docs, ~30% of bytes) and a small class; round-robin
-    each class independently (count-balance == byte-balance within a class
-    because sizes are within ~4x), and put the BIG partitions first in the
-    union so the scheduler starts the longest work first (LPT heuristic).
-    At 10^12 docs the same plan holds: both repartitions are one shuffle,
-    and AQE skew handling stays on as the backstop.
+    Every Python task pays a fixed set-up cost before its first batch,
+    whatever its input.  On a 4-core VM (PySpark 4.1.2, Python 3.11), an
+    identity ``mapInArrow`` cost 0.19 s of core time per task (64 tasks
+    against 8), and ``importlib.invalidate_caches()`` alone took
+    0.17-0.23 s per task in the worker, over 16 zipimporters.  The task
+    count trades that fixed cost against the cores a straggler leaves idle
+    at the end of the stage; the default, two tasks per core, keeps both
+    small.  Over 1,200 pages (11.6 MB) on the same VM, in one warm session
+    with the layouts interleaved, the medians of five jobs were (wall /
+    process-tree CPU): 4 tasks 5.1 s / 15.5 s, 8 tasks 5.3 / 16.2,
+    12 tasks 5.4 / 18.0, and 24 tasks (the former six per core) 5.9 / 20.9.
+
+    There is no separate big-page class.  The former plan round-robined
+    pages of 128 KB and over into partitions of their own, placed first in
+    a union.  At 8 tasks a 4 + 4 split measured 5.2 s / 16.5 s, no better
+    than one round-robin, so its second exchange and the union went.
+    Round-robin balances counts, not bytes: a task that draws several
+    0.5 MB pages still runs longest (1.5x the median task in a traced
+    8-task run).
     """
-    # Same partition count for the big class: its per-partition byte total
-    # (and task time) then lands near the small class's median instead of
-    # forming a 5-10x tail (measured via /api/v1 task quantiles).
-    big_parts = max(num_partitions // 2, 2)
-    sized = pages.withColumn("_big", F.octet_length("html") >= (1 << _BIG_BUCKET))
-    big = sized.filter(F.col("_big")).drop("_big").repartition(big_parts)
-    small = sized.filter(~F.col("_big")).drop("_big").repartition(num_partitions)
-    return big.unionByName(small)
+    return pages.repartition(num_partitions)
+
+
+def plan_extract(
+    spark: SparkSession,
+    source: str | DataFrame,
+    output_path: str | None = None,
+    rules: RuleConfig = DEFAULT_RULES,
+    num_partitions: int | None = None,
+    resume: bool = True,
+    retry_errors: bool = False,
+    lang_filter: str | None = None,
+) -> DataFrame:
+    """The extract plan up to the cascade's output (RESULT_DDL rows), before
+    any counter or sink; :func:`run_extract` documents the arguments."""
+    pages = source if isinstance(source, DataFrame) else read_pages(spark, source)
+
+    df = pages.select("url", "warc_ts", "html", "lang")
+    if lang_filter:
+        # Plain column predicate: pushes down to the scan.
+        df = df.filter(F.col("lang") == lang_filter)
+
+    if resume and output_path:
+        done = _read_done(spark, output_path, retry_errors=retry_errors)
+        if done is not None:
+            # No broadcast hint: the done-set is the whole committed output
+            # and grows without bound; AQE broadcasts it only while its
+            # measured size stays under the threshold, else SMJ.
+            df = df.join(done, "url", "left_anti")
+
+    df = dedup_latest_by_url(df)
+    if num_partitions is None:
+        num_partitions = 2 * spark.sparkContext.defaultParallelism
+    df = partition_for_cascade(df, num_partitions)
+
+    # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
+    # ~0.5 MB pages would put gigabytes in flight per task.  The UDF also
+    # re-chunks by bytes internally (functions/udf.py), but that can only
+    # split batches it has already received.  At two tasks per core a
+    # 256-row cap let one batch hold a whole partition and raised the
+    # workers' peak RSS by 4%; 64 rows kept it within 2% at the same CPU.
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+
+    rules_bc = spark.sparkContext.broadcast(rules)
+    return df.mapInArrow(make_cascade_fn(rules_bc), RESULT_DDL)
 
 
 def run_extract(
@@ -121,37 +172,15 @@ def run_extract(
       inserted, committed as a new snapshot directory — readers never see
       duplicate urls or partial writes.
 
-    With neither output, the counters are still computed (dry run over the
-    full plan).
+    ``num_partitions`` is the cascade's task count; the default is two per
+    core (:func:`partition_for_cascade`).  With neither output, the
+    counters are still computed (dry run over the full plan).
     """
-    pages = source if isinstance(source, DataFrame) else read_pages(spark, source)
-
-    df = pages.select("url", "warc_ts", "html", "lang")
-    if lang_filter:
-        # Plain column predicate: pushes down to the scan.
-        df = df.filter(F.col("lang") == lang_filter)
-
-    if resume and output_path:
-        done = _read_done(spark, output_path, retry_errors=retry_errors)
-        if done is not None:
-            # No broadcast hint: the done-set is the whole committed output
-            # and grows without bound; AQE broadcasts it only while its
-            # measured size stays under the threshold, else SMJ.
-            df = df.join(done, "url", "left_anti")
-
-    df = dedup_latest_by_url(df)
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    df = partition_for_cascade(df, num_partitions)
-
-    # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
-    # ~0.5 MB pages would put gigabytes in flight per task.  The UDF also
-    # re-chunks by bytes internally (functions/udf.py), but that can only
-    # split batches it has already received.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-
-    rules_bc = spark.sparkContext.broadcast(rules)
-    result = df.mapInArrow(make_cascade_fn(rules_bc), RESULT_DDL)
+    result = plan_extract(
+        spark, source, output_path=output_path, rules=rules,
+        num_partitions=num_partitions, resume=resume,
+        retry_errors=retry_errors, lang_filter=lang_filter,
+    )
 
     obs = Observation("extract_metrics")
     result = result.observe(
@@ -242,10 +271,23 @@ def upsert_by_url(existing: DataFrame, updates: DataFrame) -> DataFrame:
     the update row (WHEN MATCHED THEN UPDATE SET *), unmatched update rows
     are inserted (WHEN NOT MATCHED THEN INSERT *), and the result never
     holds two rows for one url — exactly :func:`merge_sql`'s semantics,
-    executable without a catalog.  The anti-join side is the update set
-    (bounded by one run's output), so AQE broadcasts it when small."""
-    kept = existing.join(updates.select("url"), "url", "left_anti")
-    return kept.unionByName(updates.select(*existing.columns))
+    executable without a catalog.
+
+    One pass over each side: the rows are tagged by origin, unioned, and
+    the update wins per url.  ``updates`` is the cascade's output, so
+    reading it twice (an anti-join on its urls, then a union) would run
+    the cascade twice; persisting it instead would pin every cleaned text.
+    The price is one shuffle of the table by url; :func:`merge_parquet`
+    rewrites the whole table on every run anyway."""
+    w = Window.partitionBy("url").orderBy(F.col("_upd").desc())
+    return (
+        existing.withColumn("_upd", F.lit(False))
+        .unionByName(updates.select(*existing.columns)
+                     .withColumn("_upd", F.lit(True)))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_upd", "_rn")
+    )
 
 
 def merge_parquet(spark: SparkSession, result: DataFrame,

@@ -567,3 +567,66 @@ def test_phase_pin_keeps_parallelism(spark):
         pinned.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def executed_nodes(df) -> list:
+    """The nodes of ``df``'s executed physical plan, looking through AQE's
+    final plan and its query stages; run an action on ``df`` first."""
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            nodes.append(node)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_default_cascade_runs_two_tasks_per_core(spark):
+    """Every Python task pays a fixed set-up cost, so by default the
+    cascade is fed by one round-robin exchange of 2 x defaultParallelism
+    partitions: no big/small union, no second cascade."""
+    from htmlcleanup_spark.plans.extract import plan_extract
+    from htmlcleanup_spark.sources.pages import synth_pages
+
+    df = plan_extract(spark, synth_pages(spark, 40, num_partitions=2))
+    df.collect()
+    nodes = executed_nodes(df)
+    names = [n.nodeName() for n in nodes]
+    assert names.count("MapInArrow") == 1, names
+    assert "Union" not in names
+    cascade = nodes[names.index("MapInArrow")]
+    want = 2 * spark.sparkContext.defaultParallelism
+    assert cascade.outputPartitioning().numPartitions() == want
+    feed = cascade.children().apply(0)
+    assert feed.nodeName() in ("Exchange", "ShuffleQueryStage"), feed.nodeName()
+
+
+def test_merge_sink_plan_runs_cascade_once(spark, tmp_path):
+    """The merge sink's plan (current snapshot upserted with the cascade's
+    output) reads the cascade once: one MapInArrow node, not one for the
+    anti-join keys and another for the union."""
+    from htmlcleanup_spark.plans.extract import (
+        _current_snapshot,
+        plan_extract,
+        run_extract,
+        upsert_by_url,
+    )
+    from htmlcleanup_spark.sources.pages import synth_pages
+
+    out = str(tmp_path / "out")
+    run_extract(spark, synth_pages(spark, 6, num_partitions=1),
+                output_path=out, num_partitions=2, sink="merge")
+    updates = plan_extract(spark, synth_pages(spark, 8, seed=99,
+                                              num_partitions=1),
+                           output_path=out, num_partitions=2)
+    merged = upsert_by_url(
+        spark.read.parquet(_current_snapshot(spark, out)), updates)
+    import re as _re
+
+    assert len(_re.findall(r"\n\(\d+\) MapInArrow", plan_of(merged))) == 1

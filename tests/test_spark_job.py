@@ -68,6 +68,29 @@ def test_extract_matches_local_engine_on_synth(spark, tmp_path):
         assert row["text"] == local.text, row["url"]
 
 
+@pytest.mark.parametrize("parts", ["one", "default", "three_per_core"])
+def test_extract_equivalent_across_partition_counts(spark, tmp_path, parts):
+    """The cascade's partitioning changes no output: for one partition, the
+    default (two per core) and three per core, every url's (text, error,
+    bytes_in, bytes_out) equals the driver-side twin."""
+    from htmlcleanup_spark.sources.pages import expected_extract_rows
+
+    n = 60
+    num_partitions = {
+        "one": 1,
+        "default": None,
+        "three_per_core": 3 * spark.sparkContext.defaultParallelism,
+    }[parts]
+    out = str(tmp_path / "out")
+    run_extract(spark, synth_pages(spark, n, num_partitions=2),
+                output_path=out, num_partitions=num_partitions)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out + "/data")
+        .select("url", "text", "error", "bytes_in", "bytes_out").collect()
+    )
+    assert got == expected_extract_rows(n)
+
+
 def test_dedup_keeps_latest(spark):
     pages = synth_pages(spark, 50, dup_every=10, num_partitions=2)
     deduped = dedup_latest_by_url(pages)
@@ -97,6 +120,22 @@ def test_size_bucket_salt_spreads_giants(spark):
     assert buckets >= 2  # log-spread sizes produce multiple buckets
     salts = withk.select("salt").distinct().count()
     assert salts > 10
+
+
+def test_slice_by_bytes_reads_sizes_from_offsets():
+    """Slices keep row order, stay within the byte budget unless one row
+    alone exceeds it, and count a null html as zero bytes."""
+    import pyarrow as pa
+
+    from htmlcleanup_spark.functions.udf import _slice_by_bytes
+
+    html = [b"aaaa", None, b"bb", b"cccccc", b"", b"d" * 9]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(html))), pa.array(html, pa.binary())],
+        names=["id", "html"],
+    )
+    slices = list(_slice_by_bytes(batch, 1, 6))
+    assert [s.column(0).to_pylist() for s in slices] == [[0, 1, 2], [3, 4], [5]]
 
 
 def test_error_column_routes_bad_docs(spark, tmp_path):
