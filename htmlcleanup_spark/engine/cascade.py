@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import Comment, Declaration, Document, Tag, Text, parse, serialize
+from .dom import Comment, Declaration, Document, Tag, Text, serialize
 from .rules import DEFAULT_RULES, RuleConfig
 
 
@@ -60,6 +60,9 @@ RX_MULTINBSPACE_NOT_AT_START = re.compile(
     r"(\S)(?<!\&nbsp\;)((?:\s|(?<!\;)\&nbsp\;(?!\&nbsp\;)){2,})"
 )
 
+# What any of the dedupe patterns needs somewhere in the string.
+_RX_DEDUPABLE = re.compile(r"\s\s|\&nbsp\;")
+
 # Anchored whitespace-class regexes can never match a serialized tag (which
 # starts with '<' and ends with '>') — used for a fast non-serializing path.
 _TEXT_ONLY_RXS = (
@@ -70,6 +73,17 @@ _TEXT_ONLY_RXS = (
     RX_MULTISPACE_AT_START,
     RX_MULTINBSPACE_AT_START,
 )
+
+# Patterns anchored at the string start whose first item is whitespace,
+# an &nbsp; or a <br>: a match needs the first char to be one of \s, & or <.
+_START_ANCHORED_RXS = frozenset((
+    RX_SPACEHTML_ONLY,
+    RX_NBSPACE_ONLY,
+    RX_NBSPACE_AT_START,
+    RX_SPACES_AT_START,
+    RX_MULTISPACE_AT_START,
+    RX_MULTINBSPACE_AT_START,
+))
 
 _BR_MATCH = RX_SPACEHTML_ONLY.search("<br />")  # constant truthy match object
 
@@ -103,10 +117,20 @@ def regex_search(element, rx):
         if _has_non_ascii(element):
             return None
         return rx.search(element)
-    if isinstance(element, Text):
-        if _has_non_ascii(element.value):
+    if element.__class__ is Text:
+        v = element.value
+        # Cheap refusals first: these patterns are anchored at one end of
+        # the string, and that end must start a whitespace run.
+        if rx is RX_NBSPACE_AT_END:
+            if not (v[-1:].isspace() or v.endswith("&nbsp;")):
+                return None
+        elif rx in _START_ANCHORED_RXS:
+            c = v[:1]
+            if not (c.isspace() or c == "&" or c == "<"):
+                return None
+        if _has_non_ascii(v):
             return None
-        return rx.search(element.value)
+        return rx.search(v)
     # Tag / Comment / Declaration
     if rx is RX_SPACEHTML_ONLY:
         if (
@@ -124,18 +148,44 @@ def regex_search(element, rx):
     return rx.search(serialize(element))
 
 
-def find_comments(root) -> list:
+def still_attached(nodes, root) -> list:
+    """The nodes still in ``root``'s tree, order kept.
+
+    Each node's ancestor chain is climbed only until it meets an ancestor
+    already classified, so the whole filter is linear in the tree size.
+    """
+    known = {root: True}
     out = []
-
-    def walk(parent):
-        for child in list(parent.contents):
-            if isinstance(child, Comment):
-                out.append(child)
-            elif isinstance(child, Tag):
-                walk(child)
-
-    walk(root)
+    for node in nodes:
+        chain = []
+        p = node
+        while p is not None and p not in known:
+            chain.append(p)
+            p = p.parent
+        attached = p is not None and known[p]
+        for c in chain:
+            known[c] = attached
+        if attached:
+            out.append(node)
     return out
+
+
+class _AlignFrame:
+    """One tag's pending check_alignment call: its arguments, its child
+    tags and how far through them it is, and the child being visited."""
+
+    __slots__ = ("tag", "align", "allow_change", "children", "next", "seen",
+                 "last_seen", "child", "child_name", "child_alignment")
+
+    def __init__(self, tag, align, allow_change):
+        self.tag = tag
+        self.align = align
+        self.allow_change = allow_change
+        self.children = []
+        self.next = 0
+        self.seen = {}  # seen_alignments
+        self.last_seen = None
+        self.child = self.child_name = self.child_alignment = None
 
 
 class CascadeEngine:
@@ -149,6 +199,9 @@ class CascadeEngine:
         self.remove_styles = rules.remove_styles
         self._img_bullet_rx = re.compile(rules.img_bullet_re)
         self.fired: dict[str, int] = {}
+        # <span>s mangle_tag made to replace a <font>: run() re-walks for
+        # the I3 span pass when this grows
+        self.spans_created = 0
 
     def _bump(self, rule: str, n: int = 1):
         if n:
@@ -181,7 +234,7 @@ class CascadeEngine:
     def _has_nonws_string(tag) -> bool:
         """Truthiness of get_contents(tag, 'nonwhitespace_string')."""
         for c in tag.contents:
-            if isinstance(c, Text) and RX_NBSPACE_ONLY.match(c.value) is None:
+            if c.__class__ is Text and RX_NBSPACE_ONLY.match(c.value) is None:
                 return True
         return False
 
@@ -312,71 +365,111 @@ class CascadeEngine:
     # S3: recursive alignment minimization (soupcleanup.py:340-443)
     # ------------------------------------------------------------------
 
-    def check_alignment(self, parent_tag, parent_align, allow_parent_change=""):
-        """Delete explicit alignments equal to the inherited one; bubble
-        uniform child alignment up; unwrap superfluous <center>."""
+    def _open_alignment_frame(self, parent_tag, parent_align,
+                              allow_parent_change):
+        """Entry half of check_alignment for one tag: unwrap superfluous
+        <center> children, pin inherited text, snapshot the child tags."""
         if parent_align == "center":
             for tag in parent_tag.find_all("center", recursive=False):
                 self.move_contents_before(tag, tag)
                 tag.extract()
                 self._bump("s3_alignment")
+        f = _AlignFrame(parent_tag, parent_align, allow_parent_change)
+        for c in parent_tag.contents:
+            if c.__class__ is Tag:
+                f.children.append(c)
+            elif (c.__class__ is Text and "inherit" not in f.seen
+                    and RX_NBSPACE_ONLY.match(c.value) is None):
+                # Non-whitespace text inherits the parent alignment: pin it.
+                f.seen["inherit"] = True
+        return f
 
-        seen_alignments = {}
-        last_seen = None
-        if self._has_nonws_string(parent_tag):
-            # Non-whitespace text inherits the parent alignment: pin it.
-            seen_alignments["inherit"] = True
+    def check_alignment(self, parent_tag, parent_align, allow_parent_change=""):
+        """Delete explicit alignments equal to the inherited one; bubble
+        uniform child alignment up; unwrap superfluous <center>.
 
-        for tag in parent_tag.find_all(recursive=False):
-            tag_name = get_tag_name(tag)
-            tag_alignment = self.get_alignment(tag)
-            if tag_alignment:
-                current_alignment = tag_alignment
-                allow_change = "any"
-            elif tag_name == "center":
-                current_alignment = "center"
-                allow_change = parent_align
-            else:
-                current_alignment = parent_align
-                allow_change = "any" if tag_name == "p" else ""
-
-            child_alignments = self.check_alignment(
-                tag, current_alignment, allow_change
-            )
-            if tag_name == "center":
-                if "CHANGE" in child_alignments:
-                    self.move_contents_before(tag, tag)
-                    tag.extract()
-                    self._bump("s3_alignment")
-            else:
-                if "CHANGE" in child_alignments:
-                    self.set_alignment(tag, child_alignments["CHANGE"])
-                    tag_alignment = child_alignments["CHANGE"]
-                    self._bump("s3_alignment")
-
-                if tag_alignment:
-                    if tag_alignment == parent_align:
-                        self.set_alignment(tag, "")
-                        seen_alignments["inherit"] = True
+        The reference recurses once per tag (soupcleanup.py:340-443); this
+        runs the same visit order on an explicit stack of frames, so a page
+        nested deeper than the interpreter's recursion limit still cleans.
+        Returns the root's seen_alignments.
+        """
+        stack = [self._open_alignment_frame(parent_tag, parent_align,
+                                            allow_parent_change)]
+        child_alignments = None
+        while True:
+            f = stack[-1]
+            if child_alignments is not None:
+                # The subtree of f's current child is done.
+                tag, tag_alignment = f.child, f.child_alignment
+                if f.child_name == "center":
+                    if "CHANGE" in child_alignments:
+                        self.move_contents_before(tag, tag)
+                        tag.extract()
                         self._bump("s3_alignment")
-                    else:
-                        last_seen = tag_alignment
-                        seen_alignments[last_seen] = True
                 else:
-                    seen_alignments["inherit"] = True
+                    if "CHANGE" in child_alignments:
+                        self.set_alignment(tag, child_alignments["CHANGE"])
+                        tag_alignment = child_alignments["CHANGE"]
+                        self._bump("s3_alignment")
 
-        if (
-            len(seen_alignments) == 1
-            and "inherit" not in seen_alignments
-            and (allow_parent_change == "any" or allow_parent_change == last_seen)
-        ):
-            seen_alignments["CHANGE"] = last_seen
-            # Only explicit align= attributes are cleared here (not styles) —
-            # the reference's asymmetry (soupcleanup.py:440-441).
-            for tag in parent_tag.find_all(attrs={"align": last_seen},
-                                           recursive=False):
-                self.set_alignment(tag, "")
-        return seen_alignments
+                    if tag_alignment:
+                        if tag_alignment == f.align:
+                            self.set_alignment(tag, "")
+                            f.seen["inherit"] = True
+                            self._bump("s3_alignment")
+                        else:
+                            f.last_seen = tag_alignment
+                            f.seen[tag_alignment] = True
+                    else:
+                        f.seen["inherit"] = True
+                child_alignments = None
+
+            if f.next < len(f.children):
+                tag = f.children[f.next]
+                f.next += 1
+                tag_name = tag.name
+                tag_alignment = self.get_alignment(tag)
+                if tag_alignment:
+                    current_alignment = tag_alignment
+                    allow_change = "any"
+                elif tag_name == "center":
+                    current_alignment = "center"
+                    allow_change = f.align
+                else:
+                    current_alignment = f.align
+                    allow_change = "any" if tag_name == "p" else ""
+                f.child, f.child_name = tag, tag_name
+                f.child_alignment = tag_alignment
+                for c in tag.contents:
+                    if c.__class__ is Tag:
+                        stack.append(self._open_alignment_frame(
+                            tag, current_alignment, allow_change))
+                        break
+                else:
+                    # No child tags: its call could unwrap no <center> and
+                    # can only return {} or {"inherit": True}, never
+                    # "CHANGE", so skip the frame.
+                    child_alignments = {}
+                continue
+
+            # All children done: close this tag's frame.
+            stack.pop()
+            seen_alignments, last_seen = f.seen, f.last_seen
+            if (
+                len(seen_alignments) == 1
+                and "inherit" not in seen_alignments
+                and (f.allow_change == "any" or f.allow_change == last_seen)
+            ):
+                seen_alignments["CHANGE"] = last_seen
+                # Only explicit align= attributes are cleared here (not
+                # styles) — the reference's asymmetry (soupcleanup.py:440-441).
+                for tag in [c for c in f.tag.contents
+                            if c.__class__ is Tag
+                            and c.get("align") == last_seen]:
+                    self.set_alignment(tag, "")
+            if not stack:
+                return seen_alignments
+            child_alignments = seen_alignments
 
     # ------------------------------------------------------------------
     # I4: attribute/style filter (soupcleanup.py:451-562); idempotent
@@ -386,28 +479,28 @@ class CascadeEngine:
         if not tag.attrs:
             return False
         changed = False
-        tag_name = get_tag_name(tag)
+        tag_name = tag.name
+        ra_tag = self.remove_attributes.get(tag_name)
+        ra_any = self.remove_attributes.get("*")
         attr_names = [pair[0] for pair in tag.attrs]
         for orig_name in attr_names:
             orig_value = tag.get(orig_name)
             if orig_value is None:  # duplicate name already removed
                 continue
             name = orig_name.lower()
-            value = orig_value.lower()
+            lower_value = value = orig_value.lower()
 
             remove = False
             rules = None
-            if (tag_name in self.remove_attributes
-                    and name in self.remove_attributes[tag_name]):
-                rules = self.remove_attributes[tag_name][name]
-            elif ("*" in self.remove_attributes
-                    and name in self.remove_attributes["*"]):
-                rules = self.remove_attributes["*"][name]
+            if ra_tag is not None and name in ra_tag:
+                rules = ra_tag[name]
+            elif ra_any is not None and name in ra_any:
+                rules = ra_any[name]
             if rules is not None:
                 if isinstance(rules, (list, tuple)):
                     remove = value in rules
                 else:
-                    remove = rules in [value, "*"]
+                    remove = rules == value or rules == "*"
             if remove:
                 value = ""
 
@@ -426,53 +519,59 @@ class CascadeEngine:
                 value = " ".join(classes)
 
             elif name == "style":
-                value = ""
-                for property_def in orig_value.split(";"):
-                    if property_def.strip() != "":
-                        p_name, p_value = property_def.split(":", 1)
-                        p_name = p_name.strip()
-                        p_value = p_value.strip()
-                        l_p_name = p_name.lower()
-                        l_p_value = p_value.lower()
-
-                        remove = False
-                        srules = None
-                        if (tag_name in self.remove_styles
-                                and l_p_name in self.remove_styles[tag_name]):
-                            srules = self.remove_styles[tag_name][l_p_name]
-                        elif ("*" in self.remove_styles
-                                and l_p_name in self.remove_styles["*"]):
-                            srules = self.remove_styles["*"][l_p_name]
-                        if srules is not None:
-                            if isinstance(srules, (list, tuple)):
-                                remove = l_p_value in srules
-                            else:
-                                remove = srules in [l_p_value, "*"]
-                        if remove:
-                            p_value = ""
-                        elif p_name.startswith("margin"):
-                            # str.isnumeric(): '0' qualifies, '0.01' does not
-                            # (the reference ran on unicode with the same
-                            # semantics, soupcleanup.py:539-543).
-                            if p_value.isnumeric() and float(p_value) < 0.02:
-                                p_value = ""
-                        elif p_name.startswith("mso-"):
-                            p_value = ""
-
-                        if p_value:
-                            if value != "":
-                                value += "; "
-                            value += p_name + ": " + p_value
+                value = self._filter_style(tag_name, orig_value)
 
             # Lowercase names; only rewrite when actually changed
             # (soupcleanup.py:556-562).
-            if name != orig_name or value != orig_value.lower():
+            if name != orig_name or value != lower_value:
                 if name != orig_name or not value:
                     del tag[orig_name]
                 if value:
                     tag[name] = value
                 changed = True
         return changed
+
+    def _filter_style(self, tag_name, style) -> str:
+        """The style value mangle_attributes keeps (soupcleanup.py:500-552):
+        removed, zero-margin and mso- properties dropped, order kept."""
+        rs_tag = self.remove_styles.get(tag_name)
+        rs_any = self.remove_styles.get("*")
+        value = ""
+        for property_def in style.split(";"):
+            if property_def.strip() != "":
+                p_name, p_value = property_def.split(":", 1)
+                p_name = p_name.strip()
+                p_value = p_value.strip()
+                l_p_name = p_name.lower()
+
+                srules = None
+                if rs_tag is not None and l_p_name in rs_tag:
+                    srules = rs_tag[l_p_name]
+                elif rs_any is not None and l_p_name in rs_any:
+                    srules = rs_any[l_p_name]
+                remove = False
+                if srules is not None:
+                    l_p_value = p_value.lower()
+                    if isinstance(srules, (list, tuple)):
+                        remove = l_p_value in srules
+                    else:
+                        remove = srules == l_p_value or srules == "*"
+                if remove:
+                    p_value = ""
+                elif p_name.startswith("margin"):
+                    # str.isnumeric(): '0' qualifies, '0.01' does not
+                    # (the reference ran on unicode with the same
+                    # semantics, soupcleanup.py:539-543).
+                    if p_value.isnumeric() and float(p_value) < 0.02:
+                        p_value = ""
+                elif p_name.startswith("mso-"):
+                    p_value = ""
+
+                if p_value:
+                    if value != "":
+                        value += "; "
+                    value += p_name + ": " + p_value
+        return value
 
     # ------------------------------------------------------------------
     # I3: wrapper-tag elimination with attribute merge (soupcleanup.py:564-791)
@@ -521,6 +620,7 @@ class CascadeEngine:
                 dest = Tag("span")
                 parent_tag.insert(tag.index_in_parent(), dest)
                 dest_is_new = True
+                self.spans_created += 1
             else:
                 changed = self.mangle_attributes(tag)
                 if not tag.attrs and tag_name in ("span", "div"):
@@ -738,7 +838,6 @@ class CascadeEngine:
     # ------------------------------------------------------------------
 
     def dedupe_whitespace(self, navstr) -> bool:
-        at_line_start = self.starts_rendered_line(navstr)
         original = navstr.value
         result = original
         # Merge following adjacent strings first (soupcleanup.py:1044-1050).
@@ -755,7 +854,15 @@ class CascadeEngine:
                 navstr.replace_with(result)
                 return True
             return False
+        if _RX_DEDUPABLE.search(result) is None:
+            # Every dedupe pattern below needs two whitespace characters in
+            # a row or an &nbsp;: none can match.
+            if result != original:
+                navstr.replace_with(result)
+                return True
+            return False
 
+        at_line_start = self.starts_rendered_line(navstr)
         # Dedupe at the start of the string.
         rx = RX_MULTISPACE_AT_START
         if self.dedupe_nbsp and not at_line_start:
@@ -1036,24 +1143,46 @@ class CascadeEngine:
     # ------------------------------------------------------------------
 
     def run(self, doc: Document) -> Document:
-        """Apply the full DOM cascade in the reference driver's order."""
+        """Apply the full DOM cascade in the reference driver's order.
+
+        The reference re-walks the whole tree for every pass (one findAll
+        per pass and tag name).  Here two walks collect the snapshots for
+        all passes, plus the S3 descent from <body>:
+
+        - walk 1, before D1: <script>, comments, <b>, <i>, <table>;
+        - walk 2, after S3: every tag name that I1-I4, W1, W4, W5 and S4
+          visit.
+
+        A later pass reuses a snapshot only while the passes in between
+        keep it exact: no tag of that name created, every removed tag
+        either filtered out or known to be detached on its own (parent
+        None, not inside a removed subtree), and document order kept.  Each
+        pass states the invariant it relies on; where it does not hold, the
+        pass takes a fresh walk.
+        """
+        # Walk 1.  D1 removes <script>s, which hold raw text only; D2
+        # removes comments, which hold nothing; D3 moves each b/i's
+        # children into a new strong/em at the same position.  None of
+        # them adds, removes or reorders the other names, so each bucket
+        # equals the findAll its pass would run.
+        comments = []
+        w = doc.find_all_multi(("script", "b", "i", "table"), comments)
+
         # D1: delete <script> subtrees (cleanup_msfp.py:100-101).
-        for tag in doc.find_all("script"):
+        for tag in w["script"]:
             tag.extract()
             self._bump("d1_script")
 
         # D2: delete comments (cleanup_msfp.py:104-105).
-        for element in find_comments(doc):
+        for element in comments:
             element.extract()
             self._bump("d2_comment")
 
         # D3: b->strong, i->em; attributes intentionally dropped
-        # (cleanup_msfp.py:109-118).  One traversal, two buckets: renaming
-        # b's neither creates nor removes i's (and vice versa), so the
-        # per-name snapshots are identical to the reference's.
-        d3 = doc.find_all_multi(("b", "i"))
+        # (cleanup_msfp.py:109-118).  Renaming b's neither creates nor
+        # removes i's (and vice versa).
         for old_name, new_name in (("b", "strong"), ("i", "em")):
-            for tag in d3[old_name]:
+            for tag in w[old_name]:
                 e = Tag(new_name)
                 tag.parent.insert(tag.index_in_parent(), e)
                 self.move_contents_inside(tag, e)
@@ -1061,12 +1190,14 @@ class CascadeEngine:
                 self._bump("d3_rename")
 
         # S1: single-cell tables (cleanup_msfp.py:126-127).
-        for table in doc.find_all("table"):
+        for table in w["table"]:
             if self.remove_single_cell_table(table):
                 self._bump("s1_single_cell_table")
 
-        # S2: bullet tables (cleanup_msfp.py:133-135).
-        for table in doc.find_all("table"):
+        # S2: bullet tables (cleanup_msfp.py:133-135).  S1 creates no
+        # table and keeps the order of the ones it leaves; it can remove a
+        # table together with tables nested in it, hence the filter.
+        for table in still_attached(w["table"], doc):
             if self.check_convert_table_to_list(table, self._img_bullet_rx):
                 self._bump("s2_bullet_table")
 
@@ -1076,12 +1207,30 @@ class CascadeEngine:
             raise CascadeError("document has no <body>")
         self.check_alignment(body, "left")
 
+        # Walk 2.  From here to S4 no pass removes a tag that still has
+        # tag children: I1 and I3 move a tag's children out before they
+        # extract it, I2 extracts only empty tags, W4 only <br>s, S4 only
+        # empty <p>s.  So "parent is not None" means "still in the
+        # document".  Every move keeps the document order of each name:
+        # unwrapping puts the children where the tag was, and I2 hoists a
+        # whitespace child just past the inline tags it was first or last
+        # in.  Only I1 (new <strong>) and the <font> pass of I3 (new
+        # <span>) create tags of these names; they re-walk when they do.
+        inline = self.inline_tag_names
+        block = ("p", "h2", "h3", "h4", "li", "blockquote")
+        w = doc.find_all_multi(
+            inline + block + ("font", "div", "span", "a", "br", "table", "ul"))
+
+        def live(name):
+            return [t for t in w[name] if t.parent is not None]
+
         # I1: normalize <a><strong> nesting to <strong><a>
         # (cleanup_msfp.py:147-162).
-        for tag in doc.find_all("a"):
+        i1_fired = False
+        for tag in w["a"]:
             r1 = tag.find_all("strong", recursive=False)
             if r1:
-                r2 = tag.find_all(recursive=False)
+                r2 = self._child_tags_capped(tag, len(r1) + 1)
                 if len(r1) == len(r2) and not self._has_nonws_string(tag):
                     for element in r1:
                         self.move_contents_before(element, element)
@@ -1090,64 +1239,60 @@ class CascadeEngine:
                     tag.parent.insert(tag.index_in_parent(), element)
                     element.insert(0, tag)
                     self._bump("i1_a_strong")
+                    i1_fired = True
+        if i1_fired:
+            w["strong"] = doc.find_all("strong")
 
         # I2: hoist whitespace out of inline tags; remove empty ones
-        # except <a> (cleanup_msfp.py:193-195).  Single bucketed traversal:
-        # hoisting never creates nor extracts tags of the *other* inline
-        # names (only whole-<br> moves and the processed tag's own removal),
-        # so each name's snapshot equals a fresh findAll.
-        i2 = doc.find_all_multi(self.inline_tag_names)
-        for tag_name in self.inline_tag_names:
-            for tag in i2[tag_name]:
+        # except <a> (cleanup_msfp.py:193-195).  Hoisting never creates
+        # nor extracts tags of the *other* inline names (only whole-<br>
+        # moves and the processed tag's own removal), so each name's
+        # snapshot equals a fresh findAll.
+        for tag_name in inline:
+            for tag in w[tag_name]:
                 if self.move_whitespace_to_parent(tag, tag_name != "a"):
                     self._bump("i2_ws_hoist")
 
         # I3: wrapper elimination, font first, p last (cleanup_msfp.py:212-214).
-        # <font> keeps its own traversal because mangling it can CREATE a
-        # <span> (soupcleanup.py:638-648) that the span pass must then see;
+        # Mangling a <font> can CREATE a <span> (soupcleanup.py:638-648)
+        # that the span pass must then see: re-walk for spans if it did.
         # div/span/a/p never create tags of each other's names.
-        for tag in doc.find_all("font"):
+        spans_before = self.spans_created
+        for tag in live("font"):
             if self.mangle_tag(tag):
                 self._bump("i3_mangle_tag")
-        i3 = doc.find_all_multi(("div", "span", "a", "p"))
+        if self.spans_created != spans_before:
+            w["span"] = doc.find_all("span")
         for tag_name in ("div", "span", "a", "p"):
-            for tag in i3[tag_name]:
+            for tag in w[tag_name]:
                 if tag.parent is None:
                     continue  # extracted by an earlier unwrap in this group
                 if self.mangle_tag(tag):
                     self._bump("i3_mangle_tag")
 
         # I4: attribute normalization (cleanup_msfp.py:219-221).
-        i4 = doc.find_all_multi(("p", "h2", "h3", "h4"))
         for tag_name in ("p", "h2", "h3", "h4"):
-            for t in i4[tag_name]:
+            for t in live(tag_name):
                 if self.mangle_attributes(t):
                     self._bump("i4_mangle_attrs")
 
         # W1: dedupe whitespace in direct string children
-        # (cleanup_msfp.py:235-245).  Dedupe only rewrites/merges strings —
-        # tag snapshots are unaffected, so one traversal serves all names.
-        w1_names = self.inline_tag_names + (
-            "p", "h2", "h3", "h4", "li", "blockquote",
-        )
-        w1 = doc.find_all_multi(w1_names)
-        for tag_name in w1_names:
-            for tag in w1[tag_name]:
+        # (cleanup_msfp.py:235-245).  Dedupe only rewrites/merges strings.
+        for tag_name in inline + block:
+            for tag in live(tag_name):
                 r = tag.contents
                 i = 0
                 while i < len(r):
-                    if isinstance(r[i], Text):
+                    if r[i].__class__ is Text:
                         if self.dedupe_whitespace(r[i]):
                             self._bump("w1_dedupe")
                     i += 1
 
         # W4: strip whitespace at non-inline boundaries
         # (cleanup_msfp.py:252-256); <li> strips newlines entirely.
-        # Strips only remove strings/brs — tag snapshots unaffected.
-        w4_names = ("p", "h2", "h3", "h4", "li", "blockquote", "div")
-        w4 = doc.find_all_multi(w4_names)
-        for tag_name in w4_names:
-            for tag in w4[tag_name]:
+        # Strips only remove strings/brs.
+        for tag_name in block + ("div",):
+            for tag in live(tag_name):
                 self.strip_non_inline_whitespace(
                     tag, True if tag_name == "li" else None
                 )
@@ -1155,20 +1300,20 @@ class CascadeEngine:
         self.strip_non_inline_whitespace(body)
 
         # W5: strip whitespace around every <br> (cleanup_msfp.py:263-269).
-        for tag in doc.find_all("br"):
+        for tag in live("br"):
             element = tag.previous_sibling
-            if isinstance(element, Text):
+            if element.__class__ is Text:
                 self.strip_trailing_whitespace(element)
                 self._bump("w5_strip_br")
             element = tag.next_sibling
-            if isinstance(element, Text):
+            if element.__class__ is Text:
                 self.strip_leading_whitespace(element)
                 self._bump("w5_strip_br")
 
         # S4: one empty <p> after block elements (cleanup_msfp.py:274-281).
         if self.rules.remove_empty_paragraphs_under_blocks:
             for tag_name in ("table", "ul"):
-                for tag in doc.find_all(tag_name):
+                for tag in live(tag_name):
                     element = tag.next_sibling
                     while regex_search(element, RX_NBSPACE_ONLY):
                         element = element.next_sibling

@@ -19,6 +19,21 @@ so this parser only needs mainstream leniency: ignore unmatched end tags,
 implicitly close ``p``/``li``/``td``/``tr`` on a new sibling, close open tags
 at EOF.  Entities are NOT decoded (``&nbsp;`` stays literal text — the
 whitespace algebra depends on that, soupcleanup.py:31-45).
+
+Tree walks: every whole-tree walk goes through :func:`descendants`, one
+pre-order iterator on an explicit stack, so no page is too deeply nested to
+walk (recursive walkers hit Python's recursion limit near 1,000 levels).
+``find_all``, ``find_all_multi``, ``find`` (which stops at the first match,
+as ``Document.body`` does) and the serializer use it; so do
+``maincontent._segment`` and ``operators.links.outlinks_of``.  The cascade
+walks each document twice plus the S3 descent from ``<body>``; which pass
+reuses which walk, and why that is exact, is stated in
+``CascadeEngine.run``.
+
+Building: :func:`parse` matches the text before a tag and the tag itself
+with one compiled pattern, appends each node to the end of a fresh tree
+without ``Tag.insert``'s detach/clamp logic, and hands each tag its
+attribute list without copying it.
 """
 
 from __future__ import annotations
@@ -57,15 +72,12 @@ class Node:
     Sibling pointers are maintained by Tag.insert / Node.extract so the
     cascade's heavy sibling walks don't pay an O(children) index scan per
     step (they did in the first version; profiling on wide bodies showed it).
+    Each subclass sets the four shared slots itself: the parser builds a
+    hundred thousand nodes per large page, and a ``super().__init__`` call
+    per node was a measurable share of parse time.
     """
 
     __slots__ = ("parent", "previous_sibling", "next_sibling", "_idx_hint")
-
-    def __init__(self):
-        self.parent = None
-        self.previous_sibling = None
-        self.next_sibling = None
-        self._idx_hint = 0
 
     # -- tree navigation ---------------------------------------------------
     def index_in_parent(self) -> int:
@@ -96,7 +108,7 @@ class Node:
     def extract(self):
         """Detach this node from its parent (keeps subtree intact)."""
         if self.parent is not None:
-            self.parent.contents.remove(self)
+            del self.parent.contents[self.index_in_parent()]
             self.parent = None
             if self.previous_sibling is not None:
                 self.previous_sibling.next_sibling = self.next_sibling
@@ -119,7 +131,8 @@ class Text(Node):
     is_text = True
 
     def __init__(self, value: str):
-        super().__init__()
+        self.parent = self.previous_sibling = self.next_sibling = None
+        self._idx_hint = 0
         self.value = value
 
     def replace_with(self, value: str):
@@ -138,7 +151,8 @@ class Comment(Node):
     is_text = False
 
     def __init__(self, value: str):
-        super().__init__()
+        self.parent = self.previous_sibling = self.next_sibling = None
+        self._idx_hint = 0
         self.value = value
 
     def __str__(self):
@@ -152,7 +166,8 @@ class Declaration(Node):
     is_text = False
 
     def __init__(self, value: str):
-        super().__init__()
+        self.parent = self.previous_sibling = self.next_sibling = None
+        self._idx_hint = 0
         self.value = value
 
     def __str__(self):
@@ -167,9 +182,12 @@ class Tag(Node):
     is_text = False
 
     def __init__(self, name: str, attrs=None):
-        super().__init__()
+        """``attrs``: a list of [name, value] lists, owned by the tag from
+        now on (not copied)."""
+        self.parent = self.previous_sibling = self.next_sibling = None
+        self._idx_hint = 0
         self.name = name
-        self.attrs = [list(a) for a in attrs] if attrs else []
+        self.attrs = attrs if attrs is not None else []
         self.contents = []
 
     # -- attribute access (dict-ish over an ordered pair list) -------------
@@ -226,80 +244,43 @@ class Tag(Node):
     def append(self, node: Node):
         self.insert(len(self.contents), node)
 
-    def find_all(self, name=None, attrs=None, text_pred=None, recursive=True):
-        """Pre-order snapshot search (like the reference's findAll usage).
+    def find_all(self, name=None, recursive=True):
+        """Snapshot list of matching descendant tags, in pre-order (like the
+        reference's findAll usage).
 
-        - name: tag name to match (ignored when text_pred given)
-        - attrs: dict of attr-name -> exact value
-        - text_pred: predicate over Text nodes; returns Text nodes instead
+        - name: tag name to match (None: every tag)
         - recursive: False = direct children only
         """
-        out = []
-        if not recursive and text_pred is None and attrs is None:
-            return [
-                c for c in self.contents
-                if isinstance(c, Tag) and (name is None or c.name == name)
-            ]
-        if recursive and text_pred is None and attrs is None:
-            # hot path: iterative preorder, name-only match
-            stack = list(reversed(self.contents))
-            while stack:
-                node = stack.pop()
-                if isinstance(node, Tag):
-                    if name is None or node.name == name:
-                        out.append(node)
-                    if node.contents:
-                        stack.extend(reversed(node.contents))
-            return out
+        nodes = descendants(self) if recursive else self.contents
+        return [n for n in nodes
+                if n.__class__ is Tag and (name is None or n.name == name)]
 
-        def match_tag(node):
-            if not isinstance(node, Tag):
-                return False
-            if name is not None and node.name != name:
-                return False
-            if attrs:
-                for k, v in attrs.items():
-                    if node.get(k) != v:
-                        return False
-            return True
-
-        def walk(parent):
-            # No defensive copy: the walk finishes before callers mutate;
-            # the returned list is the snapshot.
-            for child in parent.contents:
-                if text_pred is not None:
-                    if isinstance(child, Text) and text_pred(child.value):
-                        out.append(child)
-                elif match_tag(child):
-                    out.append(child)
-                if recursive and isinstance(child, Tag):
-                    walk(child)
-
-        walk(self)
-        return out
-
-    def find_all_multi(self, names) -> dict:
-        """One preorder traversal bucketing tags by name: {name: [tags]}.
+    def find_all_multi(self, names, comments=None) -> dict:
+        """One pre-order walk bucketing tags by name: {name: [tags]}; with
+        a ``comments`` list, the walk also appends every Comment to it.
 
         Equivalent to one find_all per name ONLY when processing tags of one
         name neither creates nor extracts tags of another name in the set —
         the cascade groups passes under that invariant (see run()).
         """
         buckets = {n: [] for n in names}
-        stack = list(reversed(self.contents))
-        while stack:
-            node = stack.pop()
-            if isinstance(node, Tag):
-                b = buckets.get(node.name)
+        get = buckets.get
+        for node in descendants(self):
+            if node.__class__ is Tag:
+                b = get(node.name)
                 if b is not None:
                     b.append(node)
-                if node.contents:
-                    stack.extend(reversed(node.contents))
+            elif comments is not None and node.__class__ is Comment:
+                comments.append(node)
         return buckets
 
-    def find(self, name=None, **kw):
-        r = self.find_all(name, **kw)
-        return r[0] if r else None
+    def find(self, name=None):
+        """First matching descendant tag in pre-order, or None; stops at
+        the first match."""
+        for node in descendants(self):
+            if node.__class__ is Tag and (name is None or node.name == name):
+                return node
+        return None
 
     def __str__(self):
         return serialize(self)
@@ -317,77 +298,135 @@ class Document(Tag):
     def body(self):
         return self.find("body")
 
-    def __str__(self):
-        return "".join(serialize(c) for c in self.contents)
+
+def descendants(root, exits=False):
+    """Every node under ``root`` in document (pre-)order; ``root`` itself is
+    not yielded.
+
+    The one tree walk of the engine: the cascade's collecting walks, the
+    ``find*`` methods, the serializer and the DOM readers outside the
+    engine all iterate this.  It runs on an explicit stack, so no nesting
+    depth can exhaust the interpreter's recursion limit.  A node's children
+    are read when the walk reaches the node, so a caller that edits the
+    tree collects what it needs first (``find_all`` returns such a list).
+
+    With ``exits``, each Tag is followed, after its last descendant, by a
+    ``None``: a consumer that pushes on every Tag and pops on every None
+    always pops the tag whose subtree just ended.
+    """
+    stack = root.contents[::-1]
+    pop = stack.pop
+    push = stack.append
+    extend = stack.extend
+    while stack:
+        node = pop()
+        yield node
+        if node.__class__ is Tag:
+            if exits:
+                push(None)
+            if node.contents:
+                extend(reversed(node.contents))
 
 
 # ---------------------------------------------------------------------------
 # Serializer
 # ---------------------------------------------------------------------------
 
-def _serialize_into(node, out: list):
-    if isinstance(node, Text):
-        out.append(node.value)
-    elif isinstance(node, Comment):
-        out.append("<!--")
-        out.append(node.value)
-        out.append("-->")
-    elif isinstance(node, Declaration):
-        out.append(node.value)
-    elif isinstance(node, Document):
-        for c in node.contents:
-            _serialize_into(c, out)
-    elif isinstance(node, Tag):
-        out.append("<")
-        out.append(node.name)
-        for k, v in node.attrs:
-            # Double quotes by default; flip to single if the value contains
-            # a double quote (BS3 convention).
-            if v is None:
-                v = k
-            if '"' in v:
-                out.append(" %s='%s'" % (k, v))
-            else:
-                out.append(' %s="%s"' % (k, v))
-        if node.name in VOID_TAGS and not node.contents:
-            out.append(" />")
+def _start_tag(node, close: str) -> str:
+    if not node.attrs:
+        return "<" + node.name + close
+    parts = ["<", node.name]
+    for k, v in node.attrs:
+        # Double quotes by default; flip to single if the value contains
+        # a double quote (BS3 convention).
+        if v is None:
+            v = k
+        if '"' in v:
+            parts.append(" %s='%s'" % (k, v))
         else:
-            out.append(">")
-            for c in node.contents:
-                _serialize_into(c, out)
-            out.append("</%s>" % node.name)
-    else:  # pragma: no cover
-        raise TypeError(type(node))
+            parts.append(' %s="%s"' % (k, v))
+    parts.append(close)
+    return "".join(parts)
 
 
 def serialize(node) -> str:
+    """Markup of ``node`` and its subtree; a Document is the concatenation
+    of its children."""
+    cls = node.__class__
+    if cls is Text or cls is Declaration:
+        return node.value
+    if cls is Comment:
+        return "<!--%s-->" % node.value
     out = []
-    _serialize_into(node, out)
+    add = out.append
+    # Per open Tag: its end tag, or "" for a void one written as <x />.
+    end_tags = []
+    push = end_tags.append
+    pop = end_tags.pop
+    nodes = (descendants(node, exits=True) if cls is Document
+             else _with_root(node))
+    for n in nodes:
+        cls = n.__class__
+        if cls is Text:
+            add(n.value)
+        elif cls is Tag:
+            name = n.name
+            if n.contents or name not in VOID_TAGS:
+                add(_start_tag(n, ">") if n.attrs else "<" + name + ">")
+                push("</" + name + ">")
+            else:
+                add(_start_tag(n, " />"))
+                push("")
+        elif n is None:
+            add(pop())
+        elif cls is Comment:
+            add("<!--%s-->" % n.value)
+        else:
+            add(n.value)
     return "".join(out)
+
+
+def _with_root(tag):
+    """``descendants(tag, exits=True)`` with ``tag`` itself around it."""
+    yield tag
+    yield from descendants(tag, exits=True)
+    yield None
 
 
 # ---------------------------------------------------------------------------
 # Tokenizer + tree builder
 # ---------------------------------------------------------------------------
 
-def _parse_attrs(s: str):
+# One attribute (name, '=' if a value follows, raw value).
+_RX_ATTR = re.compile(
+    r"""\s*([^\s=/>]+)(?:\s*(=)\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
+)
+# The common token: the text up to the next '<', then a start tag (name,
+# then everything up to the first '>') or an end tag.  Anything else at that
+# '<' (comment, declaration, stray '<', a tag with no '>') fails the match
+# and takes parse()'s slow branch.
+_RX_TOKEN = re.compile(r"([^<]*)<(?:([a-zA-Z][^\s>/]*)([^>]*)|/([^>]*))>")
+_RX_RAWTEXT_END = {
+    name: re.compile(r"</%s\s*>" % name, re.I) for name in _RAWTEXT_TAGS
+}
+
+
+def _parse_attrs(s: str) -> list:
+    """[[name, value], ...] for a start tag's inner text.  Names are
+    lowercased; a minimized attribute's value is its name (HTML rule); one
+    pair of surrounding quotes is stripped."""
     attrs = []
-    pos = 0
-    n = len(s)
-    while pos < n:
-        m = _RX_ATTR.match(s, pos)
-        if not m or m.end() == pos:
-            break
-        name = m.group(1).lower()
-        raw = m.group(2)
-        if raw is None:
-            value = name  # minimized attribute: value = name (HTML rule)
+    # The scanner matches each attribute where the previous one ended and
+    # stops at the first position where none starts.
+    for m in iter(_RX_ATTR.scanner(s).match, None):
+        name, eq, raw = m.groups()
+        name = name.lower()
+        if not eq:
+            attrs.append([name, name])
         elif raw[:1] in "\"'":
-            value = raw[1:-1]
+            attrs.append([name, raw[1:-1]])
         else:
-            value = raw
-        attrs.append([name, value])
-        pos = m.end()
+            attrs.append([name, raw])
     return attrs
 
 
@@ -396,109 +435,151 @@ def parse(html: str) -> Document:
 
     Lenient: stray ``<`` becomes text, unmatched end tags are dropped,
     open tags are closed at EOF, p/li/td/tr are implicitly closed.
+
+    Nodes are appended to a fresh tree, so each append only links the new
+    node after its parent's last child; ``Tag.insert``'s detach and index
+    clamping are for the cascade's edits.  Cost is linear in the input:
+    closing a tag costs the tags it pops, whatever the nesting depth.
     """
     doc = Document()
     stack = [doc]  # open-tag stack; stack[-1] is the insertion point
+    # name -> stack indexes of the open tags with that name, ascending: end
+    # tags and implicit closes find their target without scanning the
+    # stack, so deep nesting keeps parse linear
+    open_at = {}
     pos = 0
     n = len(html)
+    find = html.find
+    token = _RX_TOKEN.match
 
-    def open_names():
-        return [t.name for t in stack[1:]]
+    def add(node):
+        parent = stack[-1]
+        c = parent.contents
+        if c:
+            prev = c[-1]
+            prev.next_sibling = node
+            node.previous_sibling = prev
+            node._idx_hint = len(c)
+        node.parent = parent
+        c.append(node)
+
+    def pop_to(i):
+        """Close stack[i:]."""
+        for t in stack[i:]:
+            open_at[t.name].pop()
+        del stack[i:]
 
     def close_to(name):
-        """Pop stack down to and including the nearest open <name>."""
-        for i in range(len(stack) - 1, 0, -1):
-            if stack[i].name == name:
-                del stack[i:]
-                return True
-        return False
+        """Pop stack down to and including the nearest open <name>; an
+        unmatched end tag is silently dropped."""
+        at = open_at.get(name)
+        if at:
+            if at[-1] == len(stack) - 1:  # the innermost open tag
+                at.pop()
+                stack.pop()
+            else:
+                pop_to(at[-1])
 
-    def implicit_close(new_name):
-        rule = _IMPLICIT_CLOSE.get(new_name)
-        if not rule:
-            return
-        closes, boundary = rule
-        for i in range(len(stack) - 1, 0, -1):
-            nm = stack[i].name
-            if nm in boundary:
-                return
-            if nm in closes:
-                del stack[i:]
-                return
+    def implicit_close(closes, boundary):
+        """Close the nearest open tag named in ``closes`` unless a tag
+        named in ``boundary`` is open above it."""
+        top = 0
+        for nm in closes:
+            at = open_at.get(nm)
+            if at and at[-1] > top:
+                top = at[-1]
+        if top:
+            for nm in boundary:
+                at = open_at.get(nm)
+                if at and at[-1] > top:
+                    return
+            pop_to(top)
 
     while pos < n:
-        lt = html.find("<", pos)
-        if lt == -1:
-            stack[-1].append(Text(html[pos:]))
-            break
-        if lt > pos:
-            stack[-1].append(Text(html[pos:lt]))
-        rest = html[lt + 1 : lt + 2]
-        if rest == "!":
-            if html.startswith("<!--", lt):
-                end = html.find("-->", lt + 4)
-                if end == -1:
-                    stack[-1].append(Comment(html[lt + 4 :]))
-                    break
-                stack[-1].append(Comment(html[lt + 4 : end]))
-                pos = end + 3
-            else:
-                end = html.find(">", lt)
-                if end == -1:
-                    stack[-1].append(Text(html[lt:]))
-                    break
-                stack[-1].append(Declaration(html[lt : end + 1]))
-                pos = end + 1
-        elif rest == "?":
-            end = html.find(">", lt)
-            if end == -1:
-                stack[-1].append(Text(html[lt:]))
-                break
-            stack[-1].append(Declaration(html[lt : end + 1]))
-            pos = end + 1
-        elif rest == "/":
-            end = html.find(">", lt)
-            if end == -1:
-                stack[-1].append(Text(html[lt:]))
-                break
-            name = html[lt + 2 : end].strip().lower()
-            close_to(name)  # unmatched end tag: silently dropped
-            pos = end + 1
-        else:
-            m = _RX_TAG_NAME.match(html, lt + 1)
-            if not m:
-                # '<' not starting a tag: literal text
-                stack[-1].append(Text("<"))
-                pos = lt + 1
+        m = token(html, pos)
+        if m is not None:
+            text, name, inner, end_name = m.groups()
+            pos = m.end()
+            if text:  # add(Text(text)), inlined: the most common node
+                node = Text(text)
+                parent = stack[-1]
+                c = parent.contents
+                if c:
+                    prev = c[-1]
+                    prev.next_sibling = node
+                    node.previous_sibling = prev
+                    node._idx_hint = len(c)
+                node.parent = parent
+                c.append(node)
+            if name is None:
+                close_to(end_name.strip().lower())
                 continue
-            name = m.group(0).lower()
-            end = html.find(">", m.end())
-            if end == -1:
-                stack[-1].append(Text(html[lt:]))
-                break
-            inner = html[m.end() : end]
-            self_closing = inner.rstrip().endswith("/")
-            if self_closing:
-                inner = inner.rstrip()[:-1]
-            attrs = _parse_attrs(inner)
-            implicit_close(name)
+            name = name.lower()
+            self_closing = False
+            if inner:
+                if inner.rstrip().endswith("/"):
+                    self_closing = True
+                    inner = inner.rstrip()[:-1]
+                attrs = _parse_attrs(inner) if inner else []
+            else:
+                attrs = []
+            rule = _IMPLICIT_CLOSE.get(name)
+            if rule is not None:
+                implicit_close(*rule)
             tag = Tag(name, attrs)
-            stack[-1].append(tag)
-            pos = end + 1
-            if name in _RAWTEXT_TAGS and not self_closing:
+            add(tag)
+            if self_closing or name in VOID_TAGS:
+                continue
+            if name in _RAWTEXT_TAGS:
                 # Raw-text element: contents are literal until the matching
                 # end tag (scripts may contain '<'; the cascade deletes the
-                # whole subtree anyway, cleanup_msfp.py:100-101).
-                close_rx = re.compile(r"</%s\s*>" % re.escape(name), re.I)
-                mm = close_rx.search(html, pos)
-                if mm:
-                    if mm.start() > pos:
-                        tag.append(Text(html[pos : mm.start()]))
-                    pos = mm.end()
+                # whole subtree anyway, cleanup_msfp.py:100-101).  An
+                # unclosed one keeps the rest as text, even when empty.
+                mm = _RX_RAWTEXT_END[name].search(html, pos)
+                end = mm.start() if mm else n
+                if end > pos or mm is None:
+                    text = Text(html[pos:end])
+                    text.parent = tag
+                    tag.contents.append(text)
+                pos = mm.end() if mm else n
+            else:
+                at = open_at.get(name)
+                if at is None:
+                    open_at[name] = [len(stack)]
                 else:
-                    tag.append(Text(html[pos:]))
-                    pos = n
-            elif name not in VOID_TAGS and not self_closing:
+                    at.append(len(stack))
                 stack.append(tag)
+            continue
+
+        # Slow branch: whatever the next '<' starts is not a plain tag.
+        lt = find("<", pos)
+        if lt == -1:
+            add(Text(html[pos:]))
+            break
+        if lt > pos:
+            add(Text(html[pos:lt]))
+        rest = html[lt + 1 : lt + 2]
+        if rest == "!" and html.startswith("<!--", lt):
+            end = find("-->", lt + 4)
+            if end == -1:
+                add(Comment(html[lt + 4 :]))
+                break
+            add(Comment(html[lt + 4 : end]))
+            pos = end + 3
+        elif rest == "!" or rest == "?":
+            end = find(">", lt)
+            if end == -1:
+                add(Text(html[lt:]))
+                break
+            add(Declaration(html[lt : end + 1]))
+            pos = end + 1
+        elif rest == "/" or _RX_TAG_NAME.match(html, lt + 1):
+            # an end or start tag with no '>' after it: the rest is text
+            add(Text(html[lt:]))
+            break
+        else:
+            # '<' not starting a tag: literal text
+            add(Text("<"))
+            pos = lt + 1
 
     return doc

@@ -58,47 +58,61 @@ class _Block:
 
 
 def _segment(root) -> list:
-    """Depth-first walk emitting blocks in document order."""
-    blocks = []
-    cur = [None]  # current open block (boxed for closure mutation)
+    """Depth-first walk emitting blocks in document order.
 
-    def close():
-        b = cur[0]
+    One pass over ``dom.descendants`` (no recursion, so any nesting depth
+    segments).  Each open tag pushes the (chrome, in_link, is_block) its
+    descendants see; its exit pops it and, for a block, closes the block.
+    """
+    blocks = []
+    cur = None  # current open block
+    ctx = [(False, False, False)]
+    skip = 0  # > 0 while inside script/style/head/title: depth of open tags
+
+    def close(b):
         if b is not None and b.text():
             blocks.append(b)
-        cur[0] = None
 
-    def walk(node, chrome: bool, in_link: bool):
-        for child in list(node.contents):
-            if child.is_text:
-                t = child.value
-                if cur[0] is None:
-                    if not t.strip():
-                        continue
-                    cur[0] = _Block(chrome)
-                cur[0].parts.append(t)
-                n = len(_WS_RE.sub(" ", t).strip())
-                cur[0].chars += n
-                if in_link:
-                    cur[0].link_chars += n
-            elif isinstance(child, dom.Tag):
-                name = child.name.lower()
-                if name in ("script", "style", "head", "title"):
+    for node in dom.descendants(root, exits=True):
+        if skip:
+            if node is None:
+                skip -= 1
+            elif node.__class__ is dom.Tag:
+                skip += 1
+            continue
+        if node is None:
+            if ctx.pop()[2]:
+                close(cur)
+                cur = None
+            continue
+        chrome, in_link, _ = ctx[-1]
+        if node.is_text:
+            t = node.value
+            if cur is None:
+                if not t.strip():
                     continue
-                if name in _BLOCK_TAGS:
-                    close()
-                    walk(child, chrome or name in _CHROME_TAGS, in_link)
-                    close()
-                else:  # inline
-                    if cur[0] is None:
-                        cur[0] = _Block(chrome)
-                    if name == "br":
-                        cur[0].parts.append(" ")
-                        continue
-                    walk(child, chrome, in_link or name == "a")
-            # comments/declarations: no text contribution
-    walk(root, False, False)
-    close()
+                cur = _Block(chrome)
+            cur.parts.append(t)
+            n = len(_WS_RE.sub(" ", t).strip())
+            cur.chars += n
+            if in_link:
+                cur.link_chars += n
+        elif node.__class__ is dom.Tag:
+            name = node.name.lower()
+            if name in ("script", "style", "head", "title"):
+                skip = 1
+            elif name in _BLOCK_TAGS:
+                close(cur)
+                cur = None
+                ctx.append((chrome or name in _CHROME_TAGS, in_link, True))
+            else:  # inline
+                if cur is None:
+                    cur = _Block(chrome)
+                if name == "br":
+                    cur.parts.append(" ")
+                ctx.append((chrome, in_link or name == "a", False))
+        # comments/declarations: no text contribution
+    close(cur)
     return blocks
 
 

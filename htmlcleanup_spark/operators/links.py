@@ -69,43 +69,43 @@ def host_of(url: str) -> str:
     return url.split("://", 1)[1].split("/", 1)[0]
 
 
-def _anchor_text(tag) -> str:
-    """Concatenated descendant text of an ``<a>`` (document order)."""
-    from ..engine.dom import Tag, Text
-
-    parts: list[str] = []
-
-    def walk(node):
-        for c in node.contents:
-            if isinstance(c, Text):
-                parts.append(c.value)
-            elif isinstance(c, Tag):
-                walk(c)
-
-    walk(tag)
-    return "".join(parts)
-
-
 def outlinks_of(html: str, base_url: str) -> list[tuple]:
     """(seq, href, resolved_url, anchor, host) for every ``<a href=…>`` in
     document order.  Anchors without an ``href`` attribute (named anchors)
     are not links and are skipped.  Pure function — testable without
-    Spark, and the unit the differential tests drive."""
-    from ..engine.dom import parse
+    Spark, and the unit the differential tests drive.
 
-    doc = parse(html)
+    One walk over the tree: every text is listed in document order, and an
+    anchor's text is the slice of that list its subtree spans, so nested
+    anchors cost no second walk."""
+    from ..engine.dom import Tag, Text, descendants, parse
+
+    texts: list[str] = []
+    links: list[list] = []  # [href, first text index, end text index]
+    open_tags: list = []    # per open tag: its links entry, or None
+    for node in descendants(parse(html), exits=True):
+        if node is None:
+            link = open_tags.pop()
+            if link is not None:
+                link[2] = len(texts)
+        elif node.__class__ is Text:
+            texts.append(node.value)
+        elif node.__class__ is Tag:
+            href = node.get("href") if node.name == "a" else None
+            link = None if href is None else [href, len(texts), None]
+            if link is not None:
+                links.append(link)
+            open_tags.append(link)
     out = []
-    for seq, a in enumerate(
-        t for t in doc.find_all("a") if t.get("href") is not None
-    ):
-        href = a["href"]
+    for seq, (href, start, end) in enumerate(links):
         # WHATWG URL parsing strips leading/trailing C0-control (U+0000..1F)
         # and space from attribute urls before resolution; the raw href
         # column keeps them.  str.strip() alone is wrong both ways: it
         # misses C0 controls like \x01 and over-strips non-WHATWG Unicode
         # whitespace (\xa0).
         url = resolve_url(base_url, href.strip(_C0_AND_SPACE))
-        out.append((seq, href, url, _anchor_text(a), host_of(url)))
+        out.append((seq, href, url, "".join(texts[start:end]),
+                    host_of(url)))
     return out
 
 

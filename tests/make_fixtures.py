@@ -6,12 +6,21 @@ semantics (file:line citations in FIXTURES.md / SURVEY.md §2).  Re-running
 this script regenerates .out.html files; `git diff` then shows any behavior
 change, which must be re-audited before committing.
 
+The same run refreshes (or, with --check, verifies) the engine digest: one
+sha256 per input over the whole ``clean_html`` result, for a few thousand
+generated pages and tag soups.  It pins the engine's output where the
+hand-written fixtures are too few to notice a change, and it is computed
+from a file, not from a second copy of the engine, so it catches a change
+that a self-built twin would reproduce.
+
 Usage: python tests/make_fixtures.py [--check]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import random
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -20,6 +29,14 @@ from htmlcleanup_spark.engine import clean_html  # noqa: E402
 from htmlcleanup_spark.engine.rules import RuleConfig  # noqa: E402
 
 FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
+DIGEST_PATH = os.path.join(FIXTURE_DIR, "engine-digest.txt")
+
+# Digest inputs: make_html pages in the generator's 90/9/1 size mix (small
+# under 10 KB, medium under 100 KB, giant above), and seeded tag soups, the
+# first DIGEST_W6_SOUPS of them also with the optional W6 pass switched on.
+DIGEST_MIX = (540, 54, 6)
+DIGEST_SOUPS = 2000
+DIGEST_W6_SOUPS = 500
 
 
 def page(body: str) -> str:
@@ -213,6 +230,57 @@ FIXTURES["w6-split-enabled"] = {
 }
 
 
+def digest_inputs():
+    """Yield (name, html, rules) for every engine-digest input, in order."""
+    from htmlcleanup_spark.sources.pages import make_html
+    from test_engine_fuzz import TOKENS, WORDS
+
+    taken = [0, 0, 0]
+    i = 0
+    while taken != list(DIGEST_MIX):
+        html = make_html(i, seed=7)
+        c = 0 if len(html) < 10_000 else (1 if len(html) < 100_000 else 2)
+        if taken[c] < DIGEST_MIX[c]:
+            taken[c] += 1
+            yield "page-%d" % i, html, None
+        i += 1
+    w6 = RuleConfig(split_double_br=True)
+    for k in range(DIGEST_SOUPS):
+        rng = random.Random(k)
+        parts = [rng.choice(WORDS if rng.random() < 0.5 else TOKENS)
+                 for _ in range(rng.randint(0, 80))]
+        html = page("".join(parts))
+        yield "soup-%d" % k, html, None
+        if k < DIGEST_W6_SOUPS:
+            yield "soup-w6-%d" % k, html, w6
+
+
+def result_digest(r) -> str:
+    """sha256 over everything clean_html returns for one document."""
+    key = (r.text, r.error, r.bytes_in, r.bytes_out,
+           tuple(sorted(r.rules_fired.items())))
+    return hashlib.sha256(repr(key).encode("utf-8")).hexdigest()
+
+
+def engine_digest() -> list:
+    """["<name> <sha256>", ...] of the current engine over digest_inputs()."""
+    return [
+        "%s %s" % (name, result_digest(
+            clean_html(html, rules) if rules else clean_html(html)))
+        for name, html, rules in digest_inputs()
+    ]
+
+
+def read_digest() -> list:
+    with open(DIGEST_PATH) as f:
+        return f.read().splitlines()
+
+
+def digest_diffs(expected: list, got: list) -> list:
+    """Names whose digest differs (or that only one side has)."""
+    return sorted(set(line.split()[0] for line in set(expected) ^ set(got)))
+
+
 def main(check_only: bool = False) -> int:
     n_bad = 0
     for rule_dir, cases in sorted(FIXTURES.items()):
@@ -239,6 +307,14 @@ def main(check_only: bool = False) -> int:
                 f.write(result.text)
             print("== %s/%s" % (rule_dir, nn))
             print(result.text)
+    digest = engine_digest()
+    if check_only:
+        for name in digest_diffs(read_digest(), digest):
+            print("DIGEST DRIFT %s" % name)
+            n_bad += 1
+    else:
+        with open(DIGEST_PATH, "w") as f:
+            f.write("\n".join(digest) + "\n")
     return n_bad
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import make_fixtures
 import pytest
 
 from htmlcleanup_spark.engine import clean_html
@@ -54,6 +55,48 @@ def test_cascade_convergence(in_path, out_path, rule_dir):
     twice = (clean_html(once, rules) if rules else clean_html(once)).text
     thrice = (clean_html(twice, rules) if rules else clean_html(twice)).text
     assert twice is not None and thrice == twice
+
+
+def test_engine_digest_unchanged():
+    """Every digest input cleans to the frozen sha256 of its whole result
+    (text, error, byte counts and rules_fired).  Refresh the file with
+    ``python tests/make_fixtures.py`` only after auditing the change."""
+    diffs = make_fixtures.digest_diffs(make_fixtures.read_digest(),
+                                       make_fixtures.engine_digest())
+    assert diffs == [], "%d inputs drifted, first: %s" % (len(diffs),
+                                                          diffs[:10])
+
+
+class TestDepth:
+    """No document is lost to nesting depth: every tree walk in the engine
+    runs on an explicit stack (dom.descendants, the S3 frame stack)."""
+
+    @pytest.mark.parametrize("body", [
+        "<div>" * 10_000 + "deep" + "</div>" * 10_000,
+        "<font>" * 10_000 + "deep",
+        "<b>" * 10_000 + "deep",
+        "<div>" * 10_000 + "deep" + "</span>" * 10_000,
+    ], ids=["div-nested", "font-unclosed", "b-unclosed", "unmatched-ends"])
+    def test_deep_page_cleans(self, body):
+        r = clean_html(make_fixtures.page(body))
+        assert r.error is None
+        assert "deep" in r.text
+
+    def test_descendants_is_preorder_with_paired_exits(self):
+        from htmlcleanup_spark.engine.dom import Tag, descendants, parse
+
+        doc = parse("<p>a<b>b<i>c</i></b><!--d--><br>e</p><p>f</p>")
+        order = [n.name if isinstance(n, Tag) else str(n)
+                 for n in descendants(doc)]
+        assert order == ["p", "a", "b", "b", "i", "c", "<!--d-->", "br",
+                         "e", "p", "f"]
+        open_tags, closed = [], []
+        for n in descendants(doc, exits=True):
+            if n is None:
+                closed.append(open_tags.pop().name)
+            elif isinstance(n, Tag):
+                open_tags.append(n)
+        assert open_tags == [] and closed == ["i", "b", "br", "p", "p"]
 
 
 class TestPreparse:

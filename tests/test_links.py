@@ -279,6 +279,18 @@ def test_outlinks_of_messy_markup():
     ) == [(0, "\xa0/nb", "\xa0/nb", "n", "")]
 
 
+def test_outlinks_of_deep_pages():
+    """Nesting depth loses no link, and nested anchors are read in one
+    walk: each anchor's text is the text of its own subtree."""
+    base = "http://h.ex/p/1"
+    deep = "<div>" * 10_000 + '<a href="/d">deep</a>' + "</div>" * 10_000
+    assert outlinks_of(deep, base) == [
+        (0, "/d", "http://h.ex/d", "deep", "h.ex")]
+    nested = outlinks_of('<a href="/n">x' * 10_000, base)
+    assert len(nested) == 10_000
+    assert nested[0][3] == "x" * 10_000 and nested[-1][3] == "x"
+
+
 def test_outlinks_of_never_raises_fuzz():
     """Total on arbitrary input: any byte soup parses (the engine DOM is
     lenient), seq is dense 0..m-1, and resolved absolute urls always give

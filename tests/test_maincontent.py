@@ -61,6 +61,15 @@ def test_br_is_inline_not_a_block_boundary():
     assert n_blocks == 1 and n_good == 1
 
 
+def test_deep_page_segments():
+    """A block nested 10,000 deep is segmented like a shallow one."""
+    html = ("<body>" + "<div>" * 10_000 + "<p>%s</p>" % LONG
+            + "</div>" * 10_000 + "</body>")
+    text, n_blocks, n_good, err = main_content(html)
+    assert err is None
+    assert (text, n_blocks, n_good) == (LONG, 1, 1)
+
+
 def test_total_on_garbage():
     for junk in [None, b"\xff\xfe\x00junk", "", "<p>", "< < < >", "a" * 5]:
         text, n_blocks, n_good, err = main_content(junk)
