@@ -29,7 +29,7 @@ from htmlcleanup_spark.functions.text import (
     quality_score,
     token_count,
 )
-from htmlcleanup_spark.functions.udf import RESULT_DDL, make_cascade_fn
+from htmlcleanup_spark.functions.udf import clean_pages, doc_map
 from htmlcleanup_spark.operators import ann, dedup, multimodal
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -90,8 +90,12 @@ def _docs_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_cascade(df: DataFrame) -> DataFrame:
-    return df.mapInArrow(make_cascade_fn(), RESULT_DDL)
+def _synth(spark: SparkSession, sf_dir: str, make,
+           ddl: str = "payload binary") -> DataFrame:
+    """One synthetic value per documents row, a pure function of its
+    doc_id: (doc_id, <ddl columns>)."""
+    return doc_map(_docs(spark, sf_dir).select("doc_id"), make, ["doc_id"],
+                   ddl, carry=["doc_id"])
 
 
 def _phase_pin(df: DataFrame) -> DataFrame:
@@ -121,7 +125,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_clean_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _run_cascade(_docs_as_pages(spark, sf_dir))
+    out = clean_pages(_docs_as_pages(spark, sf_dir))
     return out.select(
         F.col("url").cast("bigint").alias("doc_id"),
         F.col("text").alias("clean_text"),
@@ -145,7 +149,7 @@ def q_clean_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
         "html",
         F.lit("en").alias("lang"),
     )
-    return _run_cascade(df).select("url", F.col("text").alias("clean_text"))
+    return clean_pages(df).select("url", F.col("text").alias("clean_text"))
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,7 +360,7 @@ def q_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules_fired map, sum per rule.  The pathological wrap fires an
     identical rule multiset for every ASCII single-spaced doc (asserted at
     oracle-build time), so the oracle is per-doc constants × count(*)."""
-    out = _run_cascade(_docs_as_pages(spark, sf_dir))
+    out = clean_pages(_docs_as_pages(spark, sf_dir))
     return (
         out.select(F.explode("rules_fired").alias("rule", "n"))
         .groupBy("rule")
@@ -631,20 +635,20 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full pipeline (synth pages -> dedup -> skew repartition -> cascade),
-    hash-checked: the oracle is the pure-Python engine run driver-side over
-    the same deterministic corpus (sources.pages.expected_extract_rows), so
-    the distributed plumbing — dedup window, repartition, Arrow batching,
-    column wiring — must map every url to the byte-exact engine output
-    (compared via md5 to keep the oracle literal small)."""
-    from htmlcleanup_spark.plans.extract import dedup_latest_by_url, size_bucket_salt
+    """Full pipeline (synth pages -> dedup -> round-robin repartition ->
+    cascade), hash-checked: the oracle is the pure-Python engine run
+    driver-side over the same deterministic corpus
+    (sources.pages.expected_extract_rows), so the distributed plumbing —
+    dedup window, repartition, Arrow batching, column wiring — must map
+    every url to the byte-exact engine output (compared via md5 to keep
+    the oracle literal small)."""
+    from htmlcleanup_spark.plans.extract import (
+        dedup_latest_by_url, partition_for_cascade,
+    )
     from htmlcleanup_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 200, num_partitions=4)
-    df = size_bucket_salt(dedup_latest_by_url(pages)).repartition(
-        8, "size_bucket", "salt"
-    ).drop("size_bucket", "salt")
-    out = _run_cascade(df)
+    out = clean_pages(partition_for_cascade(dedup_latest_by_url(pages), 8))
     return out.select(
         "url", F.md5("text").alias("text_md5"), "error",
         "bytes_in", "bytes_out",
@@ -727,28 +731,12 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.image_meta), and the oracle recomputes format/width/height
     arithmetically from doc_id — an independent check of the byte-level
     header parsing."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         image_meta,
         synth_image_bytes,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_image_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    imgs = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return image_meta(imgs)
+    return image_meta(_synth(spark, sf_dir, synth_image_bytes))
 
 
 def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,25 +746,9 @@ def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser (operators.pdf.pdf_text, Arrow-batched stateless map) READS the
     text back via the page tree; the oracle re-derives the text purely
     arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.pdf import pdf_text, synth_pdf_bytes
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_pdf_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    pdfs = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return pdf_text(pdfs)
+    return pdf_text(_synth(spark, sf_dir, synth_pdf_bytes))
 
 
 def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,26 +758,11 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     known article bodies; the oracle re-derives the expected main text from
     the page RECIPE in SQL, so the whole segment→score→classify chain is
     value-checked."""
-    import pandas as pd
-
     from htmlcleanup_spark.engine.maincontent import synth_article_html
     from htmlcleanup_spark.operators.content import extract_main_content
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        synth_article_html(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    pages = d.mapInPandas(gen, "doc_id bigint, html string")
-    return extract_main_content(pages)
+    return extract_main_content(
+        _synth(spark, sf_dir, synth_article_html, "html string"))
 
 
 def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,28 +770,12 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniff (BOM > meta-in-first-1024 > utf-8 trial > cp1252 fallback) over
     pages synthesized in five real encodings; the oracle re-derives the
     decoded text + detected charset arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.functions.charset import (
         decode_pages,
         synth_encoded_page,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_encoded_page(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    raw = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return decode_pages(raw)
+    return decode_pages(_synth(spark, sf_dir, synth_encoded_page))
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,7 +790,8 @@ def q_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition/quality signals + keep verdict per doc."""
     from htmlcleanup_spark.functions.text import quality_signals
 
-    return quality_signals(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir).select("doc_id", "text")
+    return quality_signals(d).drop("text")
 
 
 def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -857,7 +799,8 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction and dup-{5,10}-gram word coverage + keep verdict."""
     from htmlcleanup_spark.functions.text import repetition_signals
 
-    return repetition_signals(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir).select("doc_id", "text")
+    return repetition_signals(d).drop("text")
 
 
 def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -880,7 +823,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from htmlcleanup_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 200, num_partitions=4)
-    cleaned = _run_cascade(dedup_latest_by_url(pages)).filter(
+    cleaned = clean_pages(dedup_latest_by_url(pages)).filter(
         F.col("text").isNotNull()
     )
     out = line_dedup(cleaned, id_col="url", text_col="text")
@@ -1242,31 +1185,15 @@ def q_events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_linked_pages(spark: SparkSession, sf_dir: str):
     """Deterministic link corpus: one synthetic page per documents row,
     anchors pure arithmetic in (doc_id, N) — see operators/links."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.links import (
         synth_base_url,
         synth_linked_html,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    n = d.count()
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        synth_linked_html(int(i), n) for i in pdf["doc_id"]
-                    ],
-                    "base_url": [
-                        synth_base_url(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return d.mapInPandas(gen, "doc_id bigint, html string, base_url string")
+    n = _docs(spark, sf_dir).count()
+    return _synth(spark, sf_dir,
+                  lambda i: (synth_linked_html(i, n), synth_base_url(i)),
+                  "html string, base_url string")
 
 
 def q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,7 +1223,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one synthetic page per documents row, so the node set IS the
     # doc_id column — taking it from the parquet scan instead of
     # pages.select("doc_id") skips a second full Python synth+parse pass
-    # (mapInPandas defeats column pruning; guide §4.1)
+    # (a Python map defeats column pruning; guide §4.1)
     nodes = _docs(spark, sf_dir).select("doc_id")
     return pagerank(nodes, edges, iterations=5)
 
@@ -1483,11 +1410,10 @@ def q_training_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         id_col="doc_id", host_col="host",
     ).select("doc_id", "text"))
-    # ^ template-stripped text feeds the repetition filter AND the
-    # surviving-doc join — the recipe's phase boundary, like v2's
-    kept = _phase_pin(s3.join(
-        repetition_signals(s3).filter("keep").select("doc_id"), "doc_id"
-    ))  # feeds Bloom history AND probe
+    # ^ template-stripped text: the recipe's phase boundary, like v2's
+    kept = _phase_pin(
+        repetition_signals(s3).filter("keep").select("doc_id", "text")
+    )  # feeds Bloom history AND probe
     hist = kept.filter(F.col("doc_id") % 5 == 0).select(
         F.md5("text").alias("digest")
     )
@@ -1690,28 +1616,12 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-side parser READS them back (multimodal.audio_meta), and the
     oracle recomputes rate/channels/bits/duration/size arithmetically
     from doc_id — the audio twin of q_image_meta."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         audio_meta,
         synth_audio_bytes,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_audio_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    auds = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return audio_meta(auds)
+    return audio_meta(_synth(spark, sf_dir, synth_audio_bytes))
 
 
 def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1722,28 +1632,12 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     them back (multimodal.video_meta), and the oracle recomputes
     brand/duration/tracks/WxH/size arithmetically from doc_id — the
     video leg of the image/audio/video trio."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         synth_video_bytes,
         video_meta,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_video_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    vids = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return video_meta(vids)
+    return video_meta(_synth(spark, sf_dir, synth_video_bytes))
 
 
 def q_wet_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2934,28 +2828,12 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-EXIF JPEG), the Spark-side parser READS them back
     (multimodal.exif_meta, Arrow-batched stateless map), and the
     oracle recomputes every field arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         exif_meta,
         synth_exif_bytes,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_exif_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    imgs = d.mapInPandas(gen, "doc_id bigint, payload binary")
-    return exif_meta(imgs)
+    return exif_meta(_synth(spark, sf_dir, synth_exif_bytes))
 
 
 def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,8 +10,6 @@ WARC → decode → cascade without a bare-utf-8 guess anywhere.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 # re-exported pure core (kept importable from either layer)
@@ -22,25 +20,15 @@ from ..engine.charset import (  # noqa: F401
     expected_decoded_text,
     synth_encoded_page,
 )
-
-DECODE_DDL = "doc_id bigint, text string, charset string, error string"
+from .udf import doc_map
 
 
 def decode_pages(df: DataFrame, payload_col: str = "payload",
                  id_col: str = "doc_id") -> DataFrame:
-    """binary pages → (text, charset, error)."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, cs, err = decode_html(payload)
-                rows.append((int(doc_id), text, cs, err))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "charset", "error"])
-
-    return df.select(id_col, payload_col).mapInPandas(run, DECODE_DDL)
+    """binary pages → (id, text, charset, error)."""
+    return doc_map(df, decode_html, [payload_col],
+                   "text string, charset string, error string",
+                   carry=[id_col])
 
 
 # the 27 characters Windows-1252 remaps out of the 0x80-0x9F band,
@@ -95,32 +83,20 @@ def fix_mojibake(text_col: str = "text"):
     return F.when(candidate, F.decode(enc, "UTF-8")).otherwise(c)
 
 
-NORMALIZE_DDL = "doc_id bigint, text string"
-
-
 def nfc_normalize_text(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """Unicode NFC normalization (é as one codepoint, not e + combining
     acute) — the canonical form dedup digests and tokenizers assume.
-    Arrow-batched stateless map (unicodedata is C-backed; no JVM NFC
-    builtin exists), zero shuffles, pipelined into adjacent stages.
-    The DuckDB oracle twin is ``nfc_normalize`` (utf8proc) — both
-    implement the same Unicode canonical composition."""
-    import pandas as pd
+    A per-document map (unicodedata is C-backed; no JVM NFC builtin
+    exists), zero shuffles, pipelined into adjacent stages.  Returns
+    (id, text).  The DuckDB oracle twin is ``nfc_normalize`` (utf8proc) —
+    both implement the same Unicode canonical composition."""
     import unicodedata
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                text_col: [
-                    None if t is None
-                    else unicodedata.normalize("NFC", t)
-                    for t in pdf[text_col]
-                ],
-            })
-
-    return df.select(id_col, text_col).mapInPandas(run, NORMALIZE_DDL)
+    return doc_map(
+        df, lambda t: None if t is None else unicodedata.normalize("NFC", t),
+        [text_col], "`%s` string" % text_col, carry=[id_col],
+    )
 
 
 def strip_control_chars(text_col: str = "text"):

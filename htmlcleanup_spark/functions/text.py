@@ -1,16 +1,23 @@
 """Text-analysis column functions (training-data pipeline layer).
 
-Everything here is built-in column expressions — JVM-side, codegen-friendly,
-no Python in the hot path — and chosen so a DuckDB oracle can reproduce the
-values exactly (simple splits and arithmetic, no engine-specific regex
-dialects).
+Nearly everything here is built-in column expressions — JVM-side,
+codegen-friendly — and chosen so a DuckDB oracle can reproduce the values
+exactly (simple splits and arithmetic, no engine-specific regex dialects).
+The Gopher signal families (:func:`quality_signals`,
+:func:`repetition_signals`) are per-document Python maps on
+:func:`~htmlcleanup_spark.functions.udf.doc_map`.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from math import floor
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .udf import doc_map
 
 # Per-language stopword marker sets (top public stopwords) for the
 # stopword-count language heuristic.  Order within a set is irrelevant;
@@ -199,7 +206,7 @@ def chunk_spans(words_col: Column | str = "_ws", chunk_tokens: int = 128,
     )
 
 
-def quality_signals(df, text_col: str = "text", id_col: str = "doc_id",
+def quality_signals(df, text_col: str = "text",
                     min_words: int = 20, max_words: int = 100_000,
                     min_mean_word_len: float = 3.0,
                     max_mean_word_len: float = 10.0,
@@ -207,7 +214,8 @@ def quality_signals(df, text_col: str = "text", id_col: str = "doc_id",
                     min_unique_frac: float = 0.50):
     """Gopher-style per-document repetition/quality signals (Rae et al.
     2021 §A1.1, the standard web-corpus filter set), with a keep/drop
-    verdict applying the thresholds.
+    verdict applying the thresholds.  Returns ``df``'s columns followed by
+    the signals, so a gate is ``quality_signals(df).filter("keep")``.
 
     Columns (ratios floor-quantized to BIGINT at 1e6 — portable across
     engines, see quality_score):
@@ -215,123 +223,64 @@ def quality_signals(df, text_col: str = "text", id_col: str = "doc_id",
     - ``n_words``: whitespace tokens.
     - ``mean_word_len_e6``: total word chars / words.  Texts are
       single-space separated (the corpus contract), so word chars =
-      length - (n_words - 1) in pure column arithmetic.
+      length - (n_words - 1).
     - ``uniq_word_frac_e6``: distinct words / words — low values mean
-      word-level repetition (array_distinct is map-side, no shuffle).
+      word-level repetition.
     - ``top_bigram_frac_e6``: chars covered by the most frequent word
       2-gram / chars — THE Gopher repetition signal; boilerplate and
-      keyword-stuffed pages score high.  Needs real per-doc bigram
-      counts: explode -> count -> per-doc max.  Both aggregations have
-      map-side partial combine and the second carries one row per doc,
-      so the plan is 2 shuffles over the bigram stream plus a 1-row-per-
-      doc join back — the scale-safe shape (never a window over the
-      exploded stream).  Tie-break: max(struct(cnt, bigram)) == SQL
-      ORDER BY cnt DESC, bigram DESC LIMIT 1, deterministic.
+      keyword-stuffed pages score high.  Tie-break: the max of
+      (count, bigram) == SQL ORDER BY cnt DESC, bigram DESC LIMIT 1,
+      deterministic.
     - ``stopword_frac_e6``: English-marker hits / words (Gopher's
       "has stopwords" rule, as a ratio).
     - ``keep``: the verdict under the thresholds above.
+
+    Plan: every signal depends only on the document's own words, so the
+    whole computation is one per-document map (functions/udf.doc_map) —
+    zero shuffles, no join back to the text.  All arithmetic replays the
+    former relational expression tree's IEEE-double operation order
+    exactly; Python tuple max == Spark struct max (long first, then UTF-8
+    string order).  NULL text yields NULL signals, top_bigram 0 and NULL
+    keep — the size(NULL)/left-join semantics of the relational form.
 
     Line-granularity Gopher rules (bullet/ellipsis line fractions) live
     with :func:`~htmlcleanup_spark.operators.dedup.line_dedup`, which owns
     the line model — the documents corpus is single-line by construction.
     """
-    id_type = df.schema[id_col].dataType.simpleString()
-    names = [id_col, "n_words", "mean_word_len_e6", "uniq_word_frac_e6",
-             "stopword_frac_e6", "top_bigram_frac_e6", "keep"]
-    ddl = (
-        "%s %s, n_words int, mean_word_len_e6 long, uniq_word_frac_e6 "
-        "long, stopword_frac_e6 long, top_bigram_frac_e6 long, "
-        "keep boolean" % (id_col, id_type)
-    )
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(
-        _quality_signals_kernel(
-            min_words, max_words, min_mean_word_len, max_mean_word_len,
-            max_top_bigram_frac, min_unique_frac, names,
-        ),
-        ddl,
-    )
-
-
-def _quality_signals_kernel(min_words, max_words, min_mean_word_len,
-                            max_mean_word_len, max_top_bigram_frac,
-                            min_unique_frac, names):
-    """Arrow batch kernel for :func:`quality_signals` — same zero-shuffle
-    per-document design as _repetition_kernel (every signal depends only
-    on the document's own words; the former relational construction paid
-    a doc-keyed exchange plus a SortAggregate for the max-(cnt, bigram)
-    tie-break).  All arithmetic replays the former expression tree's
-    IEEE-double operation order exactly; Python tuple max == Spark
-    struct max (long first, then UTF-8 string order).  NULL text yields
-    NULL signals, top_bigram 0, NULL keep — the size(NULL)/left-join
-    semantics of the relational form."""
     stops = frozenset(LANG_MARKERS["en"])
     t_mwl_lo = int(min_mean_word_len * 1e6)
     t_mwl_hi = int(max_mean_word_len * 1e6)
     t_top = int(max_top_bigram_frac * 1e6)
     t_uniq = int(min_unique_frac * 1e6)
 
-    def fn(batches):
-        from collections import Counter
+    def signals(t):
+        if t is None:
+            return None, None, None, None, 0, None
+        w = t.split(" ")
+        nw = len(w)
+        nwd = float(nw)
+        nc = float(len(t))
+        den = nwd if nwd > 1.0 else 1.0
+        mwl = floor(((nc - (nwd - 1.0)) / den) * 1e6)
+        uniq = floor((float(len(set(w))) / den) * 1e6)
+        stop = floor((float(sum(x in stops for x in w)) / den) * 1e6)
+        if nw < 2:
+            top = 0
+        else:
+            cnt = Counter(" ".join(w[i:i + 2]) for i in range(nw - 1))
+            bc, bg = max((c, g) for g, c in cnt.items())
+            top = floor(((bc * float(len(bg))) / nc) * 1e6)
+        keep = (min_words <= nw <= max_words
+                and t_mwl_lo <= mwl <= t_mwl_hi
+                and top <= t_top and uniq >= t_uniq)
+        return nw, mwl, uniq, stop, top, keep
 
-        from math import floor
-
-        import pyarrow as pa
-
-        for batch in batches:
-            id_arr = batch.column(0)
-            nw_c, mwl_c, uniq_c, stop_c, top_c, keep_c = \
-                [], [], [], [], [], []
-            for t in batch.column(1).to_pylist():
-                if t is None:
-                    nw_c.append(None)
-                    mwl_c.append(None)
-                    uniq_c.append(None)
-                    stop_c.append(None)
-                    top_c.append(0)
-                    keep_c.append(None)
-                    continue
-                w = t.split(" ")
-                nw = len(w)
-                nwd = float(nw)
-                nc = float(len(t))
-                den = nwd if nwd > 1.0 else 1.0
-                mwl = floor(((nc - (nwd - 1.0)) / den) * 1e6)
-                uniq = floor((float(len(set(w))) / den) * 1e6)
-                nstop = 0
-                for x in w:
-                    if x in stops:
-                        nstop += 1
-                stop = floor((float(nstop) / den) * 1e6)
-                if nw < 2:
-                    top = 0
-                else:
-                    join = " ".join
-                    cnt = Counter(
-                        join(w[i:i + 2]) for i in range(nw - 1)
-                    )
-                    bc, bg = max(((c, g) for g, c in cnt.items()))
-                    top = floor(((bc * float(len(bg))) / nc) * 1e6)
-                nw_c.append(nw)
-                mwl_c.append(mwl)
-                uniq_c.append(uniq)
-                stop_c.append(stop)
-                top_c.append(top)
-                keep_c.append(
-                    min_words <= nw <= max_words
-                    and t_mwl_lo <= mwl <= t_mwl_hi
-                    and top <= t_top
-                    and uniq >= t_uniq
-                )
-            yield pa.record_batch(
-                [id_arr, pa.array(nw_c, pa.int32()),
-                 pa.array(mwl_c, pa.int64()),
-                 pa.array(uniq_c, pa.int64()),
-                 pa.array(stop_c, pa.int64()),
-                 pa.array(top_c, pa.int64()),
-                 pa.array(keep_c, pa.bool_())],
-                names=names,
-            )
-    return fn
+    return doc_map(
+        df, signals, [text_col],
+        "n_words int, mean_word_len_e6 long, uniq_word_frac_e6 long, "
+        "stopword_frac_e6 long, top_bigram_frac_e6 long, keep boolean",
+        carry=df.columns,
+    )
 
 
 def source_stats(df, text_col: str = "text", source_col: str = "source"):
@@ -356,8 +305,7 @@ def source_stats(df, text_col: str = "text", source_col: str = "source"):
 
 
 def host_quality(df, host_col: str = "host", text_col: str = "text",
-                 id_col: str = "doc_id", min_docs: int = 3,
-                 min_keep_frac: float = 0.5):
+                 min_docs: int = 3, min_keep_frac: float = 0.5):
     """Per-HOST reputation rollup (the RefinedWeb/CCNet move: judge the
     site, not just the page — a host whose sampled pages mostly fail
     the Gopher quality gate gets dropped wholesale, which is both a
@@ -370,19 +318,15 @@ def host_quality(df, host_col: str = "host", text_col: str = "text",
     nothing).  ``keep_frac_e6`` is exact integer arithmetic
     (n_keep * 1e6 div n_docs), no float anywhere.
 
-    Scale shape: the doc verdict chain is quality_signals' audited
-    plan; the host join-back is a doc-id equi-join (co-partitioned
-    with the signal aggregation's output key) and the rollup is ONE
-    host-keyed map-combined groupBy.  Mega-hosts are 1 row out; the
-    doc-level shuffles stay doc-keyed, so host skew never concentrates
-    a partition."""
-    sig = quality_signals(df, text_col=text_col, id_col=id_col)
-    joined = df.select(F.col(id_col), F.col(host_col)).join(
-        sig.select(F.col(id_col), F.col("keep")), id_col
-    )
+    Scale shape: the doc verdicts come from quality_signals' per-document
+    map, which carries the host column, so there is no join back; the
+    rollup is ONE host-keyed map-combined groupBy.  Mega-hosts are 1 row
+    out, and the per-document map runs on the input's partitioning, so
+    host skew never concentrates a partition."""
+    sig = quality_signals(df.select(host_col, text_col), text_col=text_col)
     n_keep = F.sum(F.col("keep").cast("int")).alias("n_keep")
     return (
-        joined.groupBy(host_col)
+        sig.groupBy(host_col)
         .agg(
             F.count("*").alias("n_docs"),
             n_keep,
@@ -423,14 +367,16 @@ def corpus_stats(df, text_col: str = "text", group_col: str = "lang",
     )
 
 
-def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
+def repetition_signals(df, text_col: str = "text",
                        top_ns: tuple = (2, 3, 4),
                        dup_ns: tuple = (5, 10),
                        max_top_frac: dict | None = None,
                        max_dup_frac: dict | None = None):
     """The FULL Gopher repetition-filter family (Rae et al. 2021 §A1.1;
     also the FineWeb/Dolma filter set) — :func:`quality_signals` carries
-    only the top-bigram member:
+    only the top-bigram member.  Returns ``df``'s columns followed by
+    ``n_words``, the signals and ``keep``, so a gate is
+    ``repetition_signals(df).filter("keep")``:
 
     - ``top{n}_frac_e6`` (n in ``top_ns``): chars attributable to the
       single most frequent word n-gram (count * gram chars / doc chars),
@@ -444,122 +390,74 @@ def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
       for n=2/3/4; dup: 0.15 for n=5, 0.10 for n=10).
 
     Plan: every signal in the family depends only on the document's OWN
-    words, so the whole computation runs inside an Arrow batch kernel —
-    ZERO shuffle at any scale (the former relational construction
-    exploded an (n, pos, gram) stream ~ sum(n) rows per word and paid a
-    doc-keyed exchange + SortAggregate for the max-struct tie-break +
-    two pivots; guide §4.2: per-doc custom logic belongs in a batched
-    kernel, not an interpreted expression chain).  Values are
-    bit-identical to the relational construction — see
-    _repetition_kernel for the exact arithmetic/tie-break mapping.
-    Skew follows the biggest document, as before.
+    words, so the whole computation is one per-document map
+    (functions/udf.doc_map) — ZERO shuffle at any scale (the former
+    relational construction exploded an (n, pos, gram) stream ~ sum(n)
+    rows per word and paid a doc-keyed exchange + SortAggregate for the
+    max-struct tie-break + two pivots).  Skew follows the biggest
+    document, as before.
+
+    Values are bit-identical to the relational construction: words =
+    text.split(" ") (== split(text, ' ', -1) with empty tokens kept); top
+    fraction = floor(((cnt * float(len(gram))) / float(n_chars)) * 1e6)
+    with the max-(cnt, gram) tie-break (Python tuple order == Spark struct
+    order: long first, then UTF8 string — UTF-8 byte order equals
+    code-point order, so str comparison matches); dup fraction =
+    floor((float(|covered positions|) / float(n_words)) * 1e6) over the
+    union of occurrence ranges of grams appearing >= 2 times.  All
+    arithmetic is the same IEEE-double operation sequence, so the e6
+    integers are bit-identical.  NULL text yields (NULL n_words, all-zero
+    fracs, keep=true), matching the size(NULL)=NULL + left-join +
+    coalesce(0) path.
     """
     max_top_frac = max_top_frac or {2: 0.20, 3: 0.18, 4: 0.16}
     max_dup_frac = max_dup_frac or {5: 0.15, 10: 0.10}
+    top_thr = {n: int(max_top_frac[n] * 1e6) for n in top_ns}
+    dup_thr = {n: int(max_dup_frac[n] * 1e6) for n in dup_ns}
+    top_ns, dup_ns = tuple(top_ns), tuple(dup_ns)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    names = (
-        [id_col, "n_words"]
-        + ["top%d_frac_e6" % n for n in top_ns]
-        + ["dup%d_frac_e6" % n for n in dup_ns]
-        + ["keep"]
+    def signals(t):
+        if t is None:
+            return (None,) + (0,) * (len(top_ns) + len(dup_ns)) + (True,)
+        w = t.split(" ")
+        nw = len(w)
+        nc = float(len(t))
+        out = [nw]
+        keep = True
+        for n in top_ns:
+            if nw < n:
+                v = 0
+            else:
+                cnt = Counter(" ".join(w[i:i + n])
+                              for i in range(nw - n + 1))
+                best_c, best_g = max((c, g) for g, c in cnt.items())
+                v = floor(((best_c * float(len(best_g))) / nc) * 1e6)
+            out.append(v)
+            keep = keep and v <= top_thr[n]
+        for n in dup_ns:
+            if nw < n:
+                v = 0
+            else:
+                grams = [" ".join(w[i:i + n]) for i in range(nw - n + 1)]
+                cnt = Counter(grams)
+                cov: set = set()
+                for i, g in enumerate(grams):
+                    if cnt[g] >= 2:
+                        cov.update(range(i, i + n))
+                v = floor((float(len(cov)) / float(nw)) * 1e6)
+            out.append(v)
+            keep = keep and v <= dup_thr[n]
+        out.append(keep)
+        return tuple(out)
+
+    return doc_map(
+        df, signals, [text_col],
+        ", ".join(["n_words int"]
+                  + ["top%d_frac_e6 long" % n for n in top_ns]
+                  + ["dup%d_frac_e6 long" % n for n in dup_ns]
+                  + ["keep boolean"]),
+        carry=df.columns,
     )
-    ddl = ", ".join(
-        ["%s %s" % (id_col, id_type), "n_words int"]
-        + ["top%d_frac_e6 long" % n for n in top_ns]
-        + ["dup%d_frac_e6 long" % n for n in dup_ns]
-        + ["keep boolean"]
-    )
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(
-        _repetition_kernel(tuple(top_ns), tuple(dup_ns),
-                           dict(max_top_frac), dict(max_dup_frac), names),
-        ddl,
-    )
-
-
-def _repetition_kernel(top_ns, dup_ns, max_top_frac, max_dup_frac, names):
-    """Arrow batch kernel for :func:`repetition_signals`.
-
-    Faithful to the former relational construction value-for-value:
-    words = text.split(" ") (== split(text, ' ', -1) with empty tokens
-    kept); top fraction = floor(((cnt * float(len(gram))) /
-    float(n_chars)) * 1e6) with the max-(cnt, gram) tie-break (Python
-    tuple order == Spark struct order: long first, then UTF8 string —
-    UTF-8 byte order equals code-point order, so str comparison
-    matches); dup fraction = floor((float(|covered positions|) /
-    float(n_words)) * 1e6) over the union of occurrence ranges of grams
-    appearing >= 2 times.  All arithmetic is the same IEEE-double
-    operation sequence, so the e6 integers are bit-identical.  NULL text
-    yields (NULL n_words, all-zero fracs, keep=true), matching the
-    size(NULL)=NULL + left-join + coalesce(0) path.
-    """
-    def fn(batches):
-        from collections import Counter
-
-        from math import floor
-
-        import pyarrow as pa
-
-        top_thr = {n: int(max_top_frac[n] * 1e6) for n in top_ns}
-        dup_thr = {n: int(max_dup_frac[n] * 1e6) for n in dup_ns}
-        for batch in batches:
-            id_arr = batch.column(0)
-            n_words_c: list = []
-            cols: dict = {n: [] for n in top_ns}
-            dcols: dict = {n: [] for n in dup_ns}
-            keeps: list = []
-            for t in batch.column(1).to_pylist():
-                if t is None:
-                    n_words_c.append(None)
-                    for n in top_ns:
-                        cols[n].append(0)
-                    for n in dup_ns:
-                        dcols[n].append(0)
-                    keeps.append(True)
-                    continue
-                w = t.split(" ")
-                nw = len(w)
-                nc = float(len(t))
-                n_words_c.append(nw)
-                join = " ".join
-                keep = True
-                for n in top_ns:
-                    if nw < n:
-                        v = 0
-                    else:
-                        cnt = Counter(
-                            join(w[i:i + n]) for i in range(nw - n + 1)
-                        )
-                        best_c, best_g = max(
-                            ((c, g) for g, c in cnt.items())
-                        )
-                        v = floor(((best_c * float(len(best_g))) / nc)
-                                  * 1e6)
-                    cols[n].append(v)
-                    keep = keep and v <= top_thr[n]
-                for n in dup_ns:
-                    if nw < n:
-                        v = 0
-                    else:
-                        grams = [join(w[i:i + n])
-                                 for i in range(nw - n + 1)]
-                        cnt = Counter(grams)
-                        cov: set = set()
-                        for i, g in enumerate(grams):
-                            if cnt[g] >= 2:
-                                cov.update(range(i, i + n))
-                        v = floor((float(len(cov)) / float(nw)) * 1e6)
-                    dcols[n].append(v)
-                    keep = keep and v <= dup_thr[n]
-                keeps.append(keep)
-            yield pa.record_batch(
-                [id_arr, pa.array(n_words_c, pa.int32())]
-                + [pa.array(cols[n], pa.int64()) for n in top_ns]
-                + [pa.array(dcols[n], pa.int64()) for n in dup_ns]
-                + [pa.array(keeps, pa.bool_())],
-                names=names,
-            )
-    return fn
 
 
 def tfidf_top_terms(df, text_col: str = "text", id_col: str = "doc_id",

@@ -1,18 +1,27 @@
-"""Vectorization shell: the cascade as an Arrow-batched map.
+"""The per-document shell: every Python map of the engine crosses here.
 
-The engine's only row-level operator (SURVEY.md §1.2): Spark hands the Python
-worker whole Arrow record batches; we run the pure-Python cascade per element
-and hand a batch back — zero per-row Spark<->Python dispatch
-(BASELINE.json:6).  Everything around it stays relational/JVM-side.
+Spark hands the Python worker whole Arrow record batches; :func:`doc_map`
+runs a pure-Python function once per row and hands a batch back — zero
+per-row Spark<->Python dispatch (BASELINE.json:6).  Everything around it
+stays relational/JVM-side.  The extract cascade (:func:`clean_pages`), the
+text-signal gates, the decoders and header parsers, and the synthetic
+payload generators all use this one boundary, so they share one memory
+rule:
 
-Output batches are *re-chunked by byte budget*: a batch of 64 KB pages is
-fine at 1024 rows, a batch of 0.5 MB pages is not — we slice input batches so
-no single Python task call holds more than ``max_batch_bytes`` of html.
+- each input batch is sliced so that no single Python call holds more than
+  ``MAX_CALL_BYTES`` (32 MB) of string/binary argument bytes — a batch of
+  64 KB pages is fine at 1024 rows, a batch of 0.5 MB pages is not.  Sizes
+  come from the Arrow offsets; a single row larger than the budget is a
+  slice of its own;
+- within a slice, the arguments reach Python one row at a time, so at most
+  one document's argument bytes plus the slice's results are Python
+  objects at once;
+- carried columns go back as the same Arrow arrays, never through Python.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -20,28 +29,28 @@ import pyarrow.compute as pc
 from ..engine.clean import clean_html
 from ..engine.rules import DEFAULT_RULES, RuleConfig
 
-# Result schema appended to the passthrough key columns.
-RESULT_FIELDS = [
-    pa.field("text", pa.string()),
-    pa.field("error", pa.string()),
-    pa.field("bytes_in", pa.int64()),
-    pa.field("bytes_out", pa.int64()),
-    pa.field("rules_fired", pa.map_(pa.string(), pa.int64())),
-]
+# String/binary argument bytes one Python call may hold (one oversized row
+# excepted): bounds a worker's memory whatever the document sizes.
+MAX_CALL_BYTES = 32 << 20
 
-RESULT_DDL = (
-    "url string, warc_ts timestamp, lang string, text string, error string, "
-    "bytes_in bigint, bytes_out bigint, rules_fired map<string,bigint>"
+# The cascade's result columns, appended to the carried page keys.
+CLEAN_DDL = (
+    "text string, error string, bytes_in bigint, bytes_out bigint, "
+    "rules_fired map<string,bigint>"
 )
 
 
-def _slice_by_bytes(batch: pa.RecordBatch, html_idx: int,
+def _slice_by_bytes(batch: pa.RecordBatch, idx: int | Sequence[int],
                     max_batch_bytes: int) -> Iterator[pa.RecordBatch]:
-    """Split a record batch so each slice's html payload fits the budget.
+    """Split a record batch so each slice's payload fits the budget.
 
-    Sizes come from the binary column's offsets, without copying a value
-    into Python."""
-    sizes = pc.binary_length(batch.column(html_idx)).fill_null(0).to_pylist()
+    A row's size is the sum of its value bytes in column ``idx`` (one index
+    or several; a null counts as zero).  Sizes come from the columns'
+    offsets, without copying a value into Python."""
+    sizes = [0] * batch.num_rows
+    for i in [idx] if isinstance(idx, int) else idx:
+        col = pc.binary_length(batch.column(i)).fill_null(0).to_pylist()
+        sizes = [a + b for a, b in zip(sizes, col)]
     start = 0
     acc = 0
     for i, s in enumerate(sizes):
@@ -54,46 +63,77 @@ def _slice_by_bytes(batch: pa.RecordBatch, html_idx: int,
         yield batch.slice(start, batch.num_rows - start)
 
 
-def make_cascade_fn(rules: RuleConfig = DEFAULT_RULES,
-                    max_batch_bytes: int = 32 << 20):
-    """Build the mapInArrow function: (url, warc_ts, html, lang) batches ->
-    (url, warc_ts, lang, text, error, bytes_in, bytes_out, rules_fired).
+def _is_bytes(t: pa.DataType) -> bool:
+    return (pa.types.is_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_string(t) or pa.types.is_large_binary(t))
 
-    ``rules`` is captured in the closure; pass a broadcast's ``.value`` holder
-    lazily by giving a ``pyspark.Broadcast`` instead of a RuleConfig.
-    """
 
-    def cascade_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cfg = rules.value if hasattr(rules, "value") else rules
+def _doc_kernel(fn: Callable, args: Sequence[str], carry: Sequence[str],
+                out: pa.Schema):
+    """The ``mapInArrow`` function behind :func:`doc_map`: Arrow batches of
+    (``carry`` ∪ ``args``) columns in, batches of ``carry`` + ``out``
+    columns out, one ``fn(*row)`` call per row."""
+    args, carry = list(args), list(carry)
+    names = carry + out.names
+    single = len(out) == 1
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            names = batch.schema.names
-            html_idx = names.index("html")
-            for chunk in _slice_by_bytes(batch, html_idx, max_batch_bytes):
-                texts, errors, b_in, b_out, fired = [], [], [], [], []
-                # one document's bytes in Python at a time, not the chunk's
-                for v in chunk.column(html_idx):
-                    res = clean_html(v.as_py() or b"", cfg)
-                    texts.append(res.text)
-                    errors.append(res.error)
-                    b_in.append(res.bytes_in)
-                    b_out.append(res.bytes_out)
-                    fired.append(sorted(res.rules_fired.items()))
-                arrays = [
-                    chunk.column(names.index("url")),
-                    chunk.column(names.index("warc_ts")),
-                    chunk.column(names.index("lang")),
-                    pa.array(texts, pa.string()),
-                    pa.array(errors, pa.string()),
-                    pa.array(b_in, pa.int64()),
-                    pa.array(b_out, pa.int64()),
-                    pa.array(fired, pa.map_(pa.string(), pa.int64())),
-                ]
+            schema = batch.schema
+            arg_idx = [schema.get_field_index(c) for c in args]
+            sized = [i for i in arg_idx if _is_bytes(schema.field(i).type)]
+            for chunk in _slice_by_bytes(batch, sized, MAX_CALL_BYTES):
+                res = [fn(*[v.as_py() for v in row])
+                       for row in zip(*(chunk.column(i) for i in arg_idx))]
+                cols = [res] if single else list(zip(*res)) or [[]] * len(out)
                 yield pa.RecordBatch.from_arrays(
-                    arrays,
-                    names=[
-                        "url", "warc_ts", "lang", "text", "error",
-                        "bytes_in", "bytes_out", "rules_fired",
-                    ],
+                    [chunk.column(c) for c in carry]
+                    + [pa.array(c, f.type) for c, f in zip(cols, out)],
+                    names=names,
                 )
 
-    return cascade_fn
+    return run
+
+
+def doc_map(df, fn: Callable, args: Sequence[str], out_ddl: str,
+            carry: Sequence[str] = ()):
+    """Map ``fn`` over the rows of ``df``: the one Python crossing for
+    per-document work.
+
+    ``fn(*row)`` receives the ``args`` columns of one row as Python values
+    (None for null) and returns one value per ``out_ddl`` column: a tuple,
+    or the bare value when ``out_ddl`` names a single column.  The result
+    has the ``carry`` columns (types from ``df``, passed through as Arrow)
+    followed by the ``out_ddl`` columns, whose Arrow types come from the
+    DDL.  A column may be both carried and an argument.  No call holds
+    more than ``MAX_CALL_BYTES`` of string/binary argument bytes (module
+    docstring).  The map is stateless: no shuffle, and it pipelines into
+    the neighbouring stages."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = StructType.fromDDL(out_ddl)
+    clash = set(carry) & set(out.names)
+    if clash:
+        raise ValueError("doc_map: carried columns %s clash with outputs"
+                         % sorted(clash))
+    schema = StructType([df.schema[c] for c in carry] + out.fields)
+    # in df's own column order, so an input that is already just these
+    # columns gets no extra projection
+    used = set(carry) | set(args)
+    return df.select(*[c for c in df.columns if c in used]).mapInArrow(
+        _doc_kernel(fn, args, carry, to_arrow_schema(out)), schema)
+
+
+def clean_pages(df, rules: RuleConfig = DEFAULT_RULES):
+    """The extract cascade: (url, warc_ts, html, lang) pages -> (url,
+    warc_ts, lang) + ``CLEAN_DDL`` rows, one :func:`clean_html` call per
+    page.  A null html cleans as the empty document."""
+
+    def clean(html):
+        res = clean_html(html or b"", rules)
+        return (res.text, res.error, res.bytes_in, res.bytes_out,
+                sorted(res.rules_fired.items()))
+
+    return doc_map(df, clean, ["html"], CLEAN_DDL,
+                   carry=["url", "warc_ts", "lang"])

@@ -1,43 +1,29 @@
 """Spark wiring for DOM-heuristic main-content extraction.
 
-Same plan slot as the cascade: a stateless Arrow-batched map with zero
-shuffles (the upstream size-bucket/salt repartition from
-``plans.extract.size_bucket_salt`` applies unchanged when page sizes are
-skewed).  The per-document logic lives in
+Same plan slot as the cascade: a stateless per-document map
+(functions/udf.doc_map) with zero shuffles; when page sizes are skewed,
+spread the pages first as the extract does
+(``plans.extract.partition_for_cascade``).  The per-document logic lives in
 :mod:`htmlcleanup_spark.engine.maincontent` and is pure/testable without
 Spark.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 from ..engine.maincontent import main_content
-
-MAIN_CONTENT_DDL = (
-    "doc_id bigint, main_text string, n_blocks int, n_good int, error string"
-)
+from ..functions.udf import doc_map
 
 
 def extract_main_content(df: DataFrame, html_col: str = "html",
                          id_col: str = "doc_id") -> DataFrame:
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf[id_col], pdf[html_col]):
-                text, nb, ng, err = main_content(html)
-                rows.append((int(doc_id), text, nb, ng, err))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "main_text", "n_blocks", "n_good",
-                         "error"],
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, MAIN_CONTENT_DDL)
+    """html pages → (id, main_text, n_blocks, n_good, error)."""
+    return doc_map(
+        df, main_content, [html_col],
+        "main_text string, n_blocks int, n_good int, error string",
+        carry=[id_col],
+    )
 
 
 def page_metadata(df: DataFrame, html_col: str = "html"):

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.udf import doc_map
+
 
 def _drop_hot_buckets(banded: DataFrame, keys: list[str],
                       max_bucket_size: int) -> DataFrame:
@@ -901,7 +903,7 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
          broadcast the repeated side), collect start offsets per doc
          (fused into the same shuffle's aggregation).
       4. join offsets back to documents (shuffle 3) and cut tokens with
-         an Arrow-batched numpy difference-array sweep — O(n_tokens +
+         a per-document numpy difference-array sweep — O(n_tokens +
          n_spans) per doc, never the O(n_tokens * n_spans) interpreted
          EXISTS-per-token loop.
 
@@ -909,7 +911,6 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
     through unchanged.
     """
     import numpy as np
-    import pandas as pd
 
     ws = F.split(F.col(text_col), " ")
     n = F.size(ws)
@@ -942,34 +943,20 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
     )
     withs = df.select(id_col, text_col).join(starts, id_col, "left")
 
-    out_ddl = "{} {}, clean_text string, n_removed int".format(
-        id_col, df.schema[id_col].dataType.simpleString()
-    )
+    def cut(text, st):
+        if not st:
+            return text, 0
+        toks = text.split(" ")
+        cover = np.zeros(len(toks) + 1, dtype=np.int32)
+        for s in st:
+            cover[s] += 1
+            cover[min(s + k, len(toks))] -= 1
+        covered = np.cumsum(cover[:-1]) > 0
+        kept = [t for t, c in zip(toks, covered) if not c]
+        return " ".join(kept), int(covered.sum())
 
-    def cut(batches):
-        for pdf in batches:
-            rows = []
-            for did, text, st in zip(
-                pdf[id_col], pdf[text_col], pdf["_starts"]
-            ):
-                if st is None or len(st) == 0:
-                    rows.append((did, text, 0))
-                    continue
-                toks = text.split(" ")
-                cover = np.zeros(len(toks) + 1, dtype=np.int32)
-                for s in st:
-                    cover[s] += 1
-                    cover[min(s + k, len(toks))] -= 1
-                covered = np.cumsum(cover[:-1]) > 0
-                kept = [t for t, c in zip(toks, covered) if not c]
-                rows.append(
-                    (did, " ".join(kept), int(covered.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "clean_text", "n_removed"]
-            )
-
-    return withs.mapInPandas(cut, out_ddl)
+    return doc_map(withs, cut, [text_col, "_starts"],
+                   "clean_text string, n_removed int", carry=[id_col])
 
 
 def paragraph_minhash_pairs(df: DataFrame, text_col: str = "text",

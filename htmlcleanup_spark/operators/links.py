@@ -11,9 +11,9 @@ link harvest.
 
 Scale design:
 
-- ``extract_outlinks`` is a stateless Arrow-batched map over pages — the
-  same zero-shuffle plan slot as the cascade; upstream size-bucket/salt
-  repartitioning applies unchanged.
+- ``extract_outlinks`` is a stateless per-document map over pages — the
+  same zero-shuffle plan slot as the cascade, so skewed pages are spread
+  the same way upstream (``plans.extract.partition_for_cascade``).
 - ``pagerank`` is the standard iterate-until-k power method expressed as
   DataFrame joins: per-iteration cost is one shuffle of the edge table on
   ``src`` (join against ranks), one on ``dst`` (contribution aggregation
@@ -28,15 +28,10 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-OUTLINKS_DDL = (
-    "src_doc bigint, seq int, href string, url string, anchor string, "
-    "host string, src_host string"
-)
+from ..functions.udf import doc_map
 
 _FILLER = "and some surrounding prose to keep the block textual"
 
@@ -113,37 +108,24 @@ def extract_outlinks(df: DataFrame, html_col: str = "html",
                      id_col: str = "doc_id",
                      base_url_col: str = "base_url") -> DataFrame:
     """The outlink table of a page corpus: one row per anchor, in document
-    order, with the href resolved against the page's base url.
+    order, with the href resolved against the page's base url —
+    (src_doc, seq, href, url, anchor, host, src_host).
 
-    Stateless Arrow-batched map — zero shuffles; the engine DOM parse is
-    the same one the cleanup cascade uses, so pages that parse for
-    extraction parse identically here.  ``src_host`` is the SOURCE page's
-    host (from its base url) — the column distinct-host inlink signals
-    aggregate (``host`` is the resolved TARGET's host).
+    A stateless per-document map returns each page's anchors as one
+    array, expanded JVM-side with ``inline`` (which keeps ``seq`` order) —
+    zero shuffles; the engine DOM parse is the same one the cleanup
+    cascade uses, so pages that parse for extraction parse identically
+    here.  ``src_host`` is the SOURCE page's host (from its base url) —
+    the column distinct-host inlink signals aggregate (``host`` is the
+    resolved TARGET's host).
     """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html, base in zip(
-                pdf[id_col], pdf[html_col], pdf[base_url_col]
-            ):
-                src_host = host_of(base)
-                for seq, href, url, anchor, host in outlinks_of(html, base):
-                    rows.append(
-                        (int(doc_id), seq, href, url, anchor, host,
-                         src_host)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["src_doc", "seq", "href", "url", "anchor", "host",
-                         "src_host"],
-            )
-
-    return df.select(id_col, html_col, base_url_col).mapInPandas(
-        run, OUTLINKS_DDL
-    )
+    return doc_map(
+        df, lambda html, base: (outlinks_of(html, base), host_of(base)),
+        [html_col, base_url_col],
+        "links array<struct<seq:int, href:string, url:string, "
+        "anchor:string, host:string>>, src_host string",
+        carry=[id_col],
+    ).select(F.col(id_col).alias("src_doc"), F.inline("links"), "src_host")
 
 
 # ---------------------------------------------------------------------------

@@ -1,27 +1,29 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the pipeline as ``binary`` columns with a
-metadata struct.  The Spark-side plumbing (schema, Arrow batching via
-mapInPandas, partition behavior) is real and tested; the *decode* step is a
-stub because no image/audio codec libraries exist in this container —
-``decode_stub=True`` (default) derives deterministic fake features from the
-payload digest, ``decode_stub=False`` raises NotImplementedError where a
-real ``PIL.Image.open`` / ``soundfile.read`` call would go.
+metadata struct.  The Spark-side plumbing (schema, the per-document map,
+partition behavior) is real and tested; the pixel *decode* step is a stub
+because no image/audio codec libraries exist in this container —
+:func:`extract_features` derives deterministic fake features from the
+payload digest where a real ``PIL.Image.open`` / ``soundfile.read`` call
+would go.  The header parsers below (image, audio, video, EXIF) are real.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-FEATURE_DDL = (
-    "doc_id bigint, n_bytes bigint, digest string, width int, height int, "
-    "codec string"
-)
+from ..functions.udf import doc_map
+
+
+def _parse_payloads(df: DataFrame, parse, ddl: str, payload_col: str,
+                    id_col: str) -> DataFrame:
+    """(id, <ddl columns>) with ``parse(payload)`` per item, a stateless
+    per-document map; a null payload parses as empty bytes."""
+    return doc_map(df, lambda p: parse(p or b""), [payload_col], ddl,
+                   carry=[id_col])
 
 
 def _fake_decode(payload: bytes):
@@ -33,41 +35,21 @@ def _fake_decode(payload: bytes):
 
 
 def extract_features(df: DataFrame, payload_col: str = "payload",
-                     id_col: str = "doc_id",
-                     decode_stub: bool = True) -> DataFrame:
-    """binary payload -> per-item features via Arrow-batched mapInPandas.
+                     id_col: str = "doc_id") -> DataFrame:
+    """binary payload -> (id, n_bytes, digest, width, height, codec) per
+    item, as a per-document map: n_bytes, the md5 digest, and a fake WxH
+    from :func:`_fake_decode` (codec ``"stub"``).  Swap ``_fake_decode``
+    for a real codec on a cluster with PIL/ffmpeg available."""
 
-    Batch shape: the UDF sees pandas DataFrames of whole Arrow batches; per
-    element it computes (n_bytes, md5 digest, fake WxH).  Swap `_fake_decode`
-    for a real codec on a cluster with PIL/ffmpeg available.
-    """
+    def features(payload):
+        w, h = _fake_decode(payload)
+        return len(payload), hashlib.md5(payload).hexdigest(), w, h, "stub"
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "real decode needs PIL/soundfile; not in this container"
-                    )
-                w, h = _fake_decode(payload)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(payload),
-                        hashlib.md5(payload).hexdigest(),
-                        w,
-                        h,
-                        "stub",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "digest", "width", "height", "codec"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fe, FEATURE_DDL)
+    return _parse_payloads(
+        df, features,
+        "n_bytes bigint, digest string, width int, height int, codec string",
+        payload_col, id_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +57,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload",
 # ---------------------------------------------------------------------------
 
 IMAGE_META_DDL = (
-    "doc_id bigint, format string, width int, height int, n_bytes bigint"
+    "format string, width int, height int, n_bytes bigint"
 )
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -144,25 +126,13 @@ def parse_image_header(b: bytes):
 
 def image_meta(df: DataFrame, payload_col: str = "payload",
                id_col: str = "doc_id") -> DataFrame:
-    """Per-item image metadata via Arrow-batched header parsing:
+    """Per-item image metadata via per-document header parsing:
     (doc_id, format, width, height, n_bytes); format/dims NULL for
     unrecognized payloads.  This is the decode-free fraction of image
     feature extraction that IS possible offline — the pixel-level decode
-    stays behind extract_features(decode_stub=...)."""
-
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, w, h = parse_image_header(payload)
-                rows.append((int(doc_id), fmt, w, h, len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "width", "height", "n_bytes"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fe, IMAGE_META_DDL)
+    stays behind the :func:`extract_features` stub."""
+    return _parse_payloads(df, lambda b: parse_image_header(b) + (len(b),),
+                           IMAGE_META_DDL, payload_col, id_col)
 
 
 def synth_image_bytes(i: int) -> bytes:
@@ -205,7 +175,7 @@ def synth_image_bytes(i: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 AUDIO_META_DDL = (
-    "doc_id bigint, format string, sample_rate int, channels int, "
+    "format string, sample_rate int, channels int, "
     "bits int, duration_e3 bigint, n_bytes bigint"
 )
 
@@ -280,28 +250,13 @@ def parse_audio_header(b: bytes):
 
 def audio_meta(df: DataFrame, payload_col: str = "payload",
                id_col: str = "doc_id") -> DataFrame:
-    """Per-item audio metadata via Arrow-batched header parsing:
+    """Per-item audio metadata via per-document header parsing:
     (doc_id, format, sample_rate, channels, bits, duration_e3,
     n_bytes); NULL fields for unrecognized payloads.  Same plan shape
-    as image_meta: a stateless mapInPandas over whole Arrow batches,
+    as image_meta: a stateless per-document map,
     zero shuffle, decode stays behind extract_features."""
-
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, rate, ch, bits, dur = parse_audio_header(payload)
-                rows.append(
-                    (int(doc_id), fmt, rate, ch, bits, dur, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "sample_rate", "channels",
-                         "bits", "duration_e3", "n_bytes"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fe, AUDIO_META_DDL)
+    return _parse_payloads(df, lambda b: parse_audio_header(b) + (len(b),),
+                           AUDIO_META_DDL, payload_col, id_col)
 
 
 _WAV_RATES = (8000, 16000, 22050, 44100)
@@ -348,7 +303,7 @@ def synth_audio_bytes(i: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 VIDEO_META_DDL = (
-    "doc_id bigint, format string, brand string, duration_e3 bigint, "
+    "format string, brand string, duration_e3 bigint, "
     "n_tracks int, width int, height int, n_bytes bigint"
 )
 
@@ -426,27 +381,12 @@ def parse_video_header(b: bytes):
 
 def video_meta(df: DataFrame, payload_col: str = "payload",
                id_col: str = "doc_id") -> DataFrame:
-    """Per-item video metadata via Arrow-batched box parsing: (doc_id,
+    """Per-item video metadata via per-document box parsing: (doc_id,
     format, brand, duration_e3, n_tracks, width, height, n_bytes);
     NULL fields for unrecognized payloads.  Same plan shape as
-    image_meta/audio_meta: stateless mapInPandas, zero shuffle."""
-
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, brand, dur, nt, w, h = parse_video_header(payload)
-                rows.append(
-                    (int(doc_id), fmt, brand, dur, nt, w, h, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "brand", "duration_e3",
-                         "n_tracks", "width", "height", "n_bytes"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fe, VIDEO_META_DDL)
+    image_meta/audio_meta: stateless per-document map, zero shuffle."""
+    return _parse_payloads(df, lambda b: parse_video_header(b) + (len(b),),
+                           VIDEO_META_DDL, payload_col, id_col)
 
 
 _VID_W = (640, 1280, 1920, 320)
@@ -503,7 +443,7 @@ def synth_video_bytes(i: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 EXIF_META_DDL = (
-    "doc_id bigint, has_exif boolean, byte_order string, orientation int, "
+    "has_exif boolean, byte_order string, orientation int, "
     "make string, dt string"
 )
 
@@ -586,26 +526,13 @@ def parse_exif(b: bytes):
 
 def exif_meta(df: DataFrame, payload_col: str = "payload",
               id_col: str = "doc_id") -> DataFrame:
-    """Per-image EXIF metadata via Arrow-batched byte parsing: (doc_id,
+    """Per-image EXIF metadata via per-document byte parsing: (doc_id,
     has_exif, byte_order, orientation, make, dt).  Stateless map, zero
     shuffles — rides the scan partitioning like image_meta; the
     orientation column is what a training pipeline's rotate-normalize
     step keys on, make/dt the provenance shard keys."""
-
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                has, bo, ori, make, dt = parse_exif(payload)
-                rows.append((int(doc_id), has, bo, ori, make, dt))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "has_exif", "byte_order",
-                         "orientation", "make", "dt"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fe, EXIF_META_DDL)
+    return _parse_payloads(df, parse_exif, EXIF_META_DDL,
+                           payload_col, id_col)
 
 
 def synth_exif_bytes(i: int) -> bytes:

@@ -1,7 +1,7 @@
 """PDF text/layout extraction: the north rule's "PDF/layout parse" leg.
 
 A pure-stdlib PDF content-stream text extractor (zlib handles FlateDecode)
-run over ``binary`` payload columns via Arrow-batched ``mapInPandas`` — the
+run over ``binary`` payload columns as a per-document map — the
 same decode-free philosophy as :mod:`.multimodal`: everything a byte-level
 parser can recover (object graph, page tree order, content-stream text
 operators, Flate streams) is REAL; nothing needs poppler/pdfminer.
@@ -26,11 +26,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame
 
-PDF_TEXT_DDL = "doc_id bigint, text string, n_pages int, error string"
+from ..functions.udf import doc_map
 
 
 # ---------------------------------------------------------------------------
@@ -379,20 +379,10 @@ def pdf_text_bytes(data: bytes) -> Tuple[Optional[str], Optional[int],
 
 def pdf_text(df: DataFrame, payload_col: str = "payload",
              id_col: str = "doc_id") -> DataFrame:
-    """binary PDF payloads → (text, n_pages, error) via Arrow-batched
-    ``mapInPandas``; stateless map, no shuffle — the plan slot is identical
-    to the HTML cascade's, so the same size-bucket/salt partitioning
-    applies upstream when payload sizes are skewed."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, np_, err = pdf_text_bytes(
-                    bytes(payload) if payload is not None else b"")
-                rows.append((int(doc_id), text, np_, err))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "n_pages", "error"])
-
-    return df.select(id_col, payload_col).mapInPandas(run, PDF_TEXT_DDL)
+    """binary PDF payloads → (id, text, n_pages, error) as a stateless
+    per-document map (functions/udf.doc_map), no shuffle — the plan slot
+    is the HTML cascade's, so skewed payload sizes are spread the same way
+    upstream (``plans.extract.partition_for_cascade``)."""
+    return doc_map(df, lambda p: pdf_text_bytes(p or b""), [payload_col],
+                   "text string, n_pages int, error string",
+                   carry=[id_col])

@@ -49,10 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..engine.rules import DEFAULT_RULES, RuleConfig
-from ..functions.udf import RESULT_DDL, make_cascade_fn
+from ..functions.udf import clean_pages
 from ..sources.pages import read_pages
-
-OUTPUT_DDL = RESULT_DDL
 
 
 def dedup_latest_by_url(pages: DataFrame) -> DataFrame:
@@ -67,14 +65,6 @@ def dedup_latest_by_url(pages: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def size_bucket_salt(pages: DataFrame, salts: int = 64) -> DataFrame:
-    """Add skew-defeating partition keys: log2 size bucket + url-hash salt."""
-    return pages.withColumn(
-        "size_bucket",
-        F.floor(F.log2(F.greatest(F.octet_length("html"), F.lit(1)))),
-    ).withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(salts)))
 
 
 def partition_for_cascade(pages: DataFrame, num_partitions: int) -> DataFrame:
@@ -113,8 +103,9 @@ def plan_extract(
     retry_errors: bool = False,
     lang_filter: str | None = None,
 ) -> DataFrame:
-    """The extract plan up to the cascade's output (RESULT_DDL rows), before
-    any counter or sink; :func:`run_extract` documents the arguments."""
+    """The extract plan up to the cascade's output (functions/udf.clean_pages
+    rows), before any counter or sink; :func:`run_extract` documents the
+    arguments."""
     pages = source if isinstance(source, DataFrame) else read_pages(spark, source)
 
     df = pages.select("url", "warc_ts", "html", "lang")
@@ -136,15 +127,14 @@ def plan_extract(
     df = partition_for_cascade(df, num_partitions)
 
     # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
-    # ~0.5 MB pages would put gigabytes in flight per task.  The UDF also
-    # re-chunks by bytes internally (functions/udf.py), but that can only
-    # split batches it has already received.  At two tasks per core a
-    # 256-row cap let one batch hold a whole partition and raised the
-    # workers' peak RSS by 4%; 64 rows kept it within 2% at the same CPU.
+    # ~0.5 MB pages would put gigabytes in flight per task.  The shell also
+    # slices by bytes (functions/udf.py), but that can only split batches
+    # it has already received.  At two tasks per core a 256-row cap let
+    # one batch hold a whole partition and raised the workers' peak RSS by
+    # 4%; 64 rows kept it within 2% at the same CPU.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 
-    rules_bc = spark.sparkContext.broadcast(rules)
-    return df.mapInArrow(make_cascade_fn(rules_bc), RESULT_DDL)
+    return clean_pages(df, rules)
 
 
 def run_extract(

@@ -130,22 +130,15 @@ def synth_rows(n: int, seed: int = 42, dup_every: int = 10):
 def synth_pages(spark: SparkSession, n: int, seed: int = 42,
                 dup_every: int = 10, num_partitions: int | None = None) -> DataFrame:
     """Synthesize the pages table distributed: generate on executors, not the
-    driver (a range -> mapInPandas generator keeps the driver O(1))."""
-    import pandas as pd
+    driver (a range -> per-row generator keeps the driver O(1)).
 
+    The rows come from an RDD map, not from the Python map shell
+    (functions/udf.doc_map): a source here is the input of the extract,
+    whose plan holds exactly one Python map, the cascade."""
     num_partitions = num_partitions or max(2, n // 2_000 or 2)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [_row_for(int(i), seed, dup_every) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return (
-        spark.range(0, n, 1, num_partitions)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+    rows = spark.sparkContext.range(0, n, numSlices=num_partitions).map(
+        lambda i: _row_for(i, seed, dup_every))
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
 
 
 def _row_for(i: int, seed: int, dup_every: int):

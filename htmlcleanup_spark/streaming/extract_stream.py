@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engine.rules import DEFAULT_RULES, RuleConfig
-from ..functions.udf import RESULT_DDL, make_cascade_fn
+from ..functions.udf import clean_pages
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -40,7 +40,7 @@ def extract_stream(pages: DataFrame, rules: RuleConfig = DEFAULT_RULES,
         df = df.withWatermark("warc_ts", "1 hour").dropDuplicatesWithinWatermark(
             ["url"]
         )
-    return df.mapInArrow(make_cascade_fn(rules), RESULT_DDL)
+    return clean_pages(df, rules)
 
 
 def dedup_stream_first_seen(pages: DataFrame,

@@ -7,6 +7,10 @@ the 100-TB design rules:
   broadcast 1-row scalar attach, which prints as BroadcastNestedLoopJoin.
 - **No BatchEvalPython** — row-at-a-time Python UDFs are banned; every
   Python crossing is mapInArrow/mapInPandas over batches.
+- **No MapInPandas outside its allowlist** — every per-document Python map
+  goes through the one Arrow shell (``functions/udf.doc_map``, a
+  MapInArrow); only whole-batch scorers and file-to-records readers may
+  convert batches to pandas.
 - **Global windows (empty PARTITION BY) only where a docstring documents
   a bound or a windowless corpus path** — a global window is a single
   sort task at corpus scale, and AQE cannot split window partitions.
@@ -62,6 +66,26 @@ GLOBAL_WINDOW_ALLOWED = {
 }
 
 
+# Documented MapInPandas users: name -> why the query is not a per-document
+# map (those go through functions/udf.doc_map).
+MAP_IN_PANDAS_ALLOWED = {
+    # operators/ann: numpy scorers over whole corpus batches (a batch of
+    # vectors against the broadcast queries/centroids), not one row at a
+    # time.
+    "ann_cosine_topk": "ann: whole-batch numpy cosine scorer",
+    "ann_sq8_topk": "ann: whole-batch int8 scorer",
+    "ann_lsh_topk": "ann: whole-batch scorer over LSH candidates",
+    "ann_ivf_topk": "ann: whole-batch scorer over probed IVF lists",
+    "ann_pq_topk": "ann: whole-batch PQ-ADC table lookups",
+    "ann_recall": "ann: composes the whole-batch scorers above",
+    "semdedup": "ann: whole-batch within-cluster cosine",
+    # sources/warc and sources/cdx: one task per WARC file, many records
+    # out — a file-to-records reader, not a per-document map.
+    "warc_ingest": "warc: file-to-records reader",
+    "cdx_generate": "warc/cdx: file-to-records reader",
+}
+
+
 @pytest.fixture(scope="module")
 def registry_plans(spark):
     import __spark_entry__ as entry
@@ -88,6 +112,22 @@ def test_no_row_at_a_time_python_udf_anywhere(registry_plans):
     offenders = [n for n, p in registry_plans.items()
                  if "BatchEvalPython" in p]
     assert offenders == [], offenders
+
+
+def test_map_in_pandas_only_where_documented(registry_plans):
+    offenders = sorted(
+        n for n, p in registry_plans.items()
+        if "MapInPandas" in p and n not in MAP_IN_PANDAS_ALLOWED
+    )
+    assert offenders == [], (
+        "per-document Python maps go through functions/udf.doc_map: %s"
+        % offenders
+    )
+    stale = sorted(
+        n for n in MAP_IN_PANDAS_ALLOWED
+        if n in registry_plans and "MapInPandas" not in registry_plans[n]
+    )
+    assert stale == [], "allowlist entries without MapInPandas: %s" % stale
 
 
 def test_global_windows_only_where_documented(registry_plans):

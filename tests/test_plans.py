@@ -99,20 +99,15 @@ def test_minhash_zero_shuffle(spark):
 
 
 def test_cascade_stage_has_no_postshuffle(spark, tmp_path):
-    """After the skew repartition, the cascade map + write must pipeline —
-    no further exchange."""
-    from htmlcleanup_spark.functions.udf import RESULT_DDL, make_cascade_fn
-    from htmlcleanup_spark.plans.extract import size_bucket_salt
+    """After the round-robin repartition, the cascade map + write must
+    pipeline — no further exchange."""
+    from htmlcleanup_spark.functions.udf import clean_pages
+    from htmlcleanup_spark.plans.extract import partition_for_cascade
     from htmlcleanup_spark.sources.pages import synth_pages
 
     src = str(tmp_path / "pages")
     synth_pages(spark, 20, num_partitions=1).write.parquet(src)
-    df = (
-        size_bucket_salt(spark.read.parquet(src))
-        .repartition(4, "size_bucket", "salt")
-        .drop("size_bucket", "salt")
-        .mapInArrow(make_cascade_fn(), RESULT_DDL)
-    )
+    df = clean_pages(partition_for_cascade(spark.read.parquet(src), 4))
     plan = plan_of(df)
     assert n_exchanges(plan) == 1  # only the explicit repartition
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan
@@ -537,6 +532,41 @@ def test_repetition_signals_zero_shuffle(spark):
     assert "SortAggregate" not in plan
     assert "BatchEvalPython" not in plan
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
+
+
+def test_host_quality_has_no_join(spark):
+    """The per-document quality map carries the host column, so the host
+    rollup aggregates the verdicts in place: no join back on doc_id."""
+    from htmlcleanup_spark.functions.text import host_quality
+
+    docs = spark.read.parquet(SF + "/documents.parquet").withColumn(
+        "host", F.concat(F.lit("h"), (F.col("doc_id") % 50).cast("string")))
+    plan = plan_of(host_quality(docs))
+    assert "Join" not in plan, plan
+    assert n_exchanges(plan) == 1, plan  # the host groupBy only
+
+
+def test_v3_repetition_gate_filters_in_place(spark, monkeypatch):
+    """training_corpus_v3's repetition gate is a Filter straight over the
+    per-document map (which carries the text), with no join back onto the
+    template-stripped phase."""
+    import re as _re
+
+    import __spark_entry__ as entry
+
+    pinned = []
+    real_pin = entry._phase_pin
+
+    def recording_pin(df):
+        pinned.append(df)
+        return real_pin(df)
+
+    monkeypatch.setattr(entry, "_phase_pin", recording_pin)
+    entry.q_training_corpus_v3(spark, SF)
+    gate = pinned[1]._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in gate, gate
+    assert _re.search(r"Filter[^\n]*keep[^\n]*\n[ :]*\+- MapInArrow",
+                      gate), gate
 
 
 def test_ngram_stream_is_codegen(spark):
