@@ -17,10 +17,18 @@ rule:
   one document's argument bytes plus the slice's results are Python
   objects at once;
 - carried columns go back as the same Arrow arrays, never through Python.
+
+Every function the package ships to Python workers (this shell, the ANN
+scorers, the WARC/CDX readers, the streaming state functions, the
+synthetic-page map) first calls :func:`worker_once`, which makes PySpark's
+per-task import-cache reset cheap for the rest of the worker's life.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Callable, Iterator, Sequence
 
 import pyarrow as pa
@@ -38,6 +46,55 @@ CLEAN_DDL = (
     "text string, error string, bytes_in bigint, bytes_out bigint, "
     "rules_fired map<string,bigint>"
 )
+
+
+class _SparkArchiveImporter(zipimport.zipimporter):
+    """A zipimporter over an archive of Spark's own install, which does not
+    change while a worker lives: it keeps the directory it read instead of
+    re-reading the archive on ``invalidate_caches``."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def worker_once() -> None:
+    """Stop PySpark's per-task import-cache reset from re-reading Spark's
+    own zips in this worker; idempotent, and a no-op outside a Spark task.
+
+    Every Python task starts with ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``), and each cached
+    zipimporter then re-reads its archive's directory: on PySpark 4.1.2,
+    13 importers over ``pyspark.zip``, 2 over the spark-core jar and 1 over
+    py4j, 0.15-0.28 s of CPU per task.  Archives whose real path lies
+    under ``SPARK_HOME`` do not change while a worker lives.  The first
+    call swaps each cached importer over one of them for a
+    :class:`_SparkArchiveImporter` and replaces the stock zipimporter path
+    hook, so importers made later for them (a pyspark subpackage a later
+    task imports first) are of that kind too.  Other archives
+    (``addPyFile``, ``--py-files``) and directories keep the stock
+    importers, so files shipped to later tasks are still seen."""
+    stock = zipimport.zipimporter
+    if stock not in sys.path_hooks:  # set up already
+        return
+    from pyspark import TaskContext
+
+    home = os.environ.get("SPARK_HOME")
+    if TaskContext.get() is None or not home:
+        return
+    home = os.path.join(os.path.realpath(home), "")
+
+    def spark_owned(imp) -> bool:
+        return (type(imp) is stock
+                and os.path.realpath(imp.archive).startswith(home))
+
+    def hook(path):
+        imp = stock(path)
+        return _SparkArchiveImporter(path) if spark_owned(imp) else imp
+
+    sys.path_hooks[:] = [hook if h is stock else h for h in sys.path_hooks]
+    for path, imp in list(sys.path_importer_cache.items()):
+        if spark_owned(imp):
+            sys.path_importer_cache[path] = _SparkArchiveImporter(path)
 
 
 def _slice_by_bytes(batch: pa.RecordBatch, idx: int | Sequence[int],
@@ -78,6 +135,7 @@ def _doc_kernel(fn: Callable, args: Sequence[str], carry: Sequence[str],
     single = len(out) == 1
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        worker_once()
         for batch in batches:
             schema = batch.schema
             arg_idx = [schema.get_field_index(c) for c in args]

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..functions.udf import worker_once
+
 
 def _cosine_np_udf():
     """Arrow-vectorized cosine (numpy) — the hot path.
@@ -41,6 +43,7 @@ def _cosine_np_udf():
 
     @pandas_udf("double")
     def cos(q: pd.Series, v: pd.Series) -> pd.Series:
+        worker_once()
         qa = np.stack(q.to_numpy()).astype(np.float64)
         va = np.stack(v.to_numpy()).astype(np.float64)
         num = np.einsum("ij,ij->i", qa, va)
@@ -126,6 +129,7 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         Qn = Qm / (np.linalg.norm(Qm, axis=1, keepdims=True) + 1e-300)
 
         def score_partition(batches, qids=qids, Qn=Qn):
+            worker_once()
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -193,6 +197,7 @@ def _bucket_udf(dim: int, bits: int = 8, seed: int = 42,
 
     @pandas_udf("array<int>")
     def buckets(v: pd.Series) -> pd.Series:
+        worker_once()
         va = np.stack(v.to_numpy()).astype(np.float64)
         signs = (va @ P.T) >= 0.0                # [n, n_tables*bits]
         sig = signs.reshape(len(va), n_tables, bits) @ weights
@@ -397,6 +402,7 @@ def _assign_udf(centroids, nprobe: int):
 
     @pandas_udf("array<int>")
     def assign(v: pd.Series) -> pd.Series:
+        worker_once()
         va = np.stack(v.to_numpy()).astype(np.float64)
         va = va / (np.linalg.norm(va, axis=1, keepdims=True) + 1e-12)
         sims = va @ centroids.T
@@ -599,6 +605,7 @@ def pq_encode(embeddings: DataFrame, codebooks,
 
     @pandas_udf("array<int>")
     def enc(v: pd.Series) -> pd.Series:
+        worker_once()
         V = np.stack(v.to_numpy()).astype(np.float64)
         V = V / (np.linalg.norm(V, axis=1, keepdims=True) + 1e-12)
         S = V.reshape(len(V), m, d_sub)
@@ -631,6 +638,7 @@ def _pair_scored_cut(cands: DataFrame, k: int, slack: float,
     """
 
     def score(batches):
+        worker_once()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -669,6 +677,7 @@ def _pair_threshold_cut(cands: DataFrame, min_raw: float,
     """
 
     def score(batches):
+        worker_once()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -722,6 +731,7 @@ def _pq_scored(codes: DataFrame, qids, lut, k: int, slack: float,
     m = lut.shape[1]
 
     def score(batches, qids=qids, lut=lut):
+        worker_once()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -981,6 +991,7 @@ def sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         Qq, qsc = _sq8_quantize(Qm)
 
         def score_partition(batches, qids=qids, Qq=Qq, qsc=qsc):
+            worker_once()
             for pdf in batches:
                 if len(pdf) == 0:
                     continue

@@ -258,6 +258,14 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 5,
     ``checkpoint_dir``: same contract as connected_components — default
     localCheckpoint (fast, executor-local, no fault tolerance), or true
     reliable checkpoint() to the given HDFS/S3 path for cluster runs.
+
+    Broadcast timeout: because the cuts are lazy, building an iteration's
+    dangling broadcast is what computes the previous iteration (its
+    joins, its shuffle on ``dst`` and the cut).  In a session without
+    AQE that work runs while the broadcast is awaited, so
+    ``spark.sql.broadcastTimeout`` (300 s by default) bounds a whole
+    iteration, not just the 1-row aggregate.  A graph whose iteration
+    takes longer needs AQE or a larger timeout.
     """
     if checkpoint_dir is not None:
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -379,6 +387,11 @@ def hits(nodes: DataFrame, edges: DataFrame, iterations: int = 4,
     multi-consumer rule).  ``checkpoint_dir`` has the pagerank /
     connected_components contract: None -> localCheckpoint, path ->
     reliable checkpoint() for cluster runs.
+
+    Broadcast timeout: as in :func:`pagerank`, building an iteration's
+    normaliser broadcast computes the previous iteration behind its lazy
+    cut, so in a session without AQE ``spark.sql.broadcastTimeout``
+    (300 s by default) bounds a whole iteration.
     """
     if checkpoint_dir is not None:
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)

@@ -23,14 +23,14 @@ and local[32]):
   path upserts and has no such duplicates).
 - dedup: keep the newest warc_ts per url.  This shuffles by url once.
 - cascade partitioning: every Python task pays a fixed set-up cost before
-  its first batch, whatever its input size — about 0.2 s on PySpark 4.1.2
-  / Python 3.11, mostly ``importlib.invalidate_caches()`` re-reading the
-  pyspark.zip directory once per zipimporter.  The default is therefore two
-  cascade tasks per core, one ``repartition(2 * defaultParallelism)``:
-  enough that one slow task does not leave a core idle for the rest of
-  the stage, few enough that set-up stays a small share of it.  The
-  former separate class for big pages is gone: at this task count it ran
-  no faster (numbers in :func:`partition_for_cascade`).  The default
+  its first batch, whatever its input size — about 0.08 s of CPU on
+  PySpark 4.1.2 / Python 3.11 once ``functions/udf.worker_once`` has run
+  in the worker (0.35 s before it).  The default is two cascade tasks per
+  core, one ``repartition(2 * defaultParallelism)``: enough that one slow
+  task does not leave a core idle for the rest of the stage; finer
+  partitions cost CPU and gained no wall time (numbers in
+  :func:`partition_for_cascade`).  The former separate class for big
+  pages is gone: at this task count it ran no faster.  The default
   ignores input size: at cluster scale two tasks per core make each task
   hours long, and a lost executor re-runs all of them, so callers still
   pass ``num_partitions`` there.
@@ -72,15 +72,29 @@ def partition_for_cascade(pages: DataFrame, num_partitions: int) -> DataFrame:
 
     Every Python task pays a fixed set-up cost before its first batch,
     whatever its input.  On a 4-core VM (PySpark 4.1.2, Python 3.11), an
-    identity ``mapInArrow`` cost 0.19 s of core time per task (64 tasks
-    against 8), and ``importlib.invalidate_caches()`` alone took
-    0.17-0.23 s per task in the worker, over 16 zipimporters.  The task
-    count trades that fixed cost against the cores a straggler leaves idle
-    at the end of the stage; the default, two tasks per core, keeps both
-    small.  Over 1,200 pages (11.6 MB) on the same VM, in one warm session
-    with the layouts interleaved, the medians of five jobs were (wall /
-    process-tree CPU): 4 tasks 5.1 s / 15.5 s, 8 tasks 5.3 / 16.2,
-    12 tasks 5.4 / 18.0, and 24 tasks (the former six per core) 5.9 / 20.9.
+    identity ``doc_map`` costs 0.08 s of core time per task (64 tasks
+    against 8, JVM side included); it cost 0.35 s while every task's
+    ``importlib.invalidate_caches()`` re-read Spark's zips, which
+    :func:`~htmlcleanup_spark.functions.udf.worker_once` now stops after
+    a worker's first task.  The task count trades that fixed cost against
+    the cores a straggler leaves idle at the end of the stage.  Over 1,200
+    pages (about 11 MB, the ``extract_fresh`` corpus of two perfbench
+    seeds) on the same VM, in one warm session with the layouts
+    interleaved, the medians of five jobs were (wall /
+    process-tree CPU):
+
+    ======  ============  ============
+    tasks   seed 21       seed 22
+    ======  ============  ============
+    4       3.37 / 10.45  3.59 / 10.85
+    8       3.96 / 11.60  3.41 / 10.33
+    16      3.84 / 12.39  3.67 / 11.33
+    24      4.10 / 13.48  3.98 / 13.53
+    ======  ============  ============
+
+    Finer partitions cost CPU and gain no wall time.  One task per core
+    won on one corpus and lost on the other, so the default stays at two
+    per core.
 
     There is no separate big-page class.  The former plan round-robined
     pages of 128 KB and over into partitions of their own, placed first in

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udf import worker_once
+
 __all__ = ["CDX_JSON_DDL", "surt_key", "parse_cdxj", "read_cdx",
            "latest_captures", "to_cdxj_lines", "fetch_plan",
            "merge_capture_indexes", "fetch_warc_ranges",
@@ -330,6 +332,7 @@ def fetch_warc_ranges(plan: DataFrame, warc_dir: str,
     from .warc import _iter_decompressed, iter_warc_records
 
     def fetch(batches):
+        worker_once()
         for pdf in batches:
             for fn, start, end in zip(
                 pdf["filename"], pdf["read_start"], pdf["read_end"]
@@ -375,6 +378,7 @@ def _enumerate_sorted(captures: DataFrame,
     )
 
     def enumerate_partition(batches):
+        worker_once()
         seen = 0
         for pdf in batches:
             out = pd.DataFrame(

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.udf import worker_once
+
 PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -136,8 +138,12 @@ def synth_pages(spark: SparkSession, n: int, seed: int = 42,
     (functions/udf.doc_map): a source here is the input of the extract,
     whose plan holds exactly one Python map, the cascade."""
     num_partitions = num_partitions or max(2, n // 2_000 or 2)
-    rows = spark.sparkContext.range(0, n, numSlices=num_partitions).map(
-        lambda i: _row_for(i, seed, dup_every))
+
+    def row(i):
+        worker_once()
+        return _row_for(i, seed, dup_every)
+
+    rows = spark.sparkContext.range(0, n, numSlices=num_partitions).map(row)
     return spark.createDataFrame(rows, PAGES_SCHEMA)
 
 

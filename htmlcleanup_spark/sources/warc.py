@@ -36,6 +36,8 @@ from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.udf import worker_once
+
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -206,6 +208,7 @@ def read_warc(spark: SparkSession, path: str,
     )
 
     def parse(batches):
+        worker_once()
         for pdf in batches:
             for content in pdf["content"]:
                 for batch in iter_warc_batches(bytes(content),
@@ -452,6 +455,7 @@ def warc_to_cdx(spark: SparkSession, path: str,
     )
 
     def gen(batches):
+        worker_once()
         cols = ["url", "cdx_ts", "mime", "status", "digest",
                 "length", "offset", "filename"]
         for pdf in batches:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engine.rules import DEFAULT_RULES, RuleConfig
-from ..functions.udf import clean_pages
+from ..functions.udf import clean_pages, worker_once
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -50,46 +50,55 @@ def dedup_stream_first_seen(pages: DataFrame,
     (applyInPandasWithState), for pipelines that must suppress duplicates
     online rather than reconcile them in the batch MERGE.
 
-    State is one marker per distinct url with a processing-time TTL
-    (re-armed on every sighting), so state size is bounded by the distinct
-    urls seen within the TTL window, not the stream's lifetime — the knob
-    that keeps 10^12-doc state holdable.  After a url's state expires, its
-    next recrawl passes through again; the downstream MERGE (newest
-    warc_ts wins at the table) reconciles that tail.
+    State is one marker per distinct url with an event-time TTL: the
+    stream's watermark trails its newest ``warc_ts`` by ``ttl_minutes``,
+    and a marker times out once the watermark passes the newest crawl of
+    its url (re-armed on every sighting).  State size is therefore bounded
+    by the distinct urls crawled within the TTL window, not the stream's
+    lifetime — the knob that keeps 10^12-doc state holdable.  After a
+    url's state expires, its next recrawl passes through again; the
+    downstream MERGE (newest warc_ts wins at the table) reconciles that
+    tail.  A page crawled more than the TTL before the newest crawl seen
+    is late, and Spark drops it: its url's marker may already be gone.
+
+    Expiry follows the crawl clock, not the wall clock, so a replay emits
+    the same rows, and an ``availableNow`` query ends once its input is
+    drained.  (With a processing-time timeout Spark plans another no-data
+    batch after every batch, so such a query never ends by itself.)
     """
     import pandas as pd
+    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     cols = [f.name for f in PAGES_SCHEMA.fields]
 
     def first_seen(key, pdfs, state):
+        worker_once()
         if state.hasTimedOut:
             state.remove()
             return
-        if state.exists:
-            state.setTimeoutDuration(ttl_minutes * 60 * 1000)  # re-arm TTL
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        if not frames:
             return
-        best = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            cand = pdf.sort_values("warc_ts").head(1)
-            if best is None or (
-                cand["warc_ts"].iloc[0] < best["warc_ts"].iloc[0]
-            ):
-                best = cand
-        if best is None:
-            return
+        rows = pd.concat(frames)
+        new = not state.exists
         state.update((1,))
-        state.setTimeoutDuration(ttl_minutes * 60 * 1000)
-        yield best[cols]
+        # epoch ms from the JVM: no time-zone reading of pandas timestamps
+        state.setTimeoutTimestamp(int(rows["_ts_ms"].max()))
+        if new:
+            yield rows.sort_values("warc_ts").head(1)[cols]
 
-    return pages.groupBy("url").applyInPandasWithState(
-        first_seen,
-        outputStructType=PAGES_SCHEMA,
-        stateStructType="seen int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        pages.withWatermark("warc_ts", "%d minutes" % ttl_minutes)
+        .withColumn("_ts_ms", F.unix_millis("warc_ts"))
+        .groupBy("url")
+        .applyInPandasWithState(
+            first_seen,
+            outputStructType=PAGES_SCHEMA,
+            stateStructType="seen int",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 
@@ -258,6 +267,7 @@ def capture_history_stream(captures: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def ledger(key, pdfs, state):
+        worker_once()
         if state.exists:
             last_digest, version = state.get
         else:

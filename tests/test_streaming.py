@@ -44,7 +44,11 @@ def test_stateful_first_seen_dedup_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        # the event-time TTL lets the availableNow query end by itself
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     got = spark.sql("SELECT * FROM first_seen")
     assert got.count() == 15  # urls 0..14, each exactly once
     assert got.select("url").distinct().count() == 15

@@ -1,10 +1,14 @@
 """Contract of the per-document shell (functions/udf.doc_map): nulls, empty
 batches, carried Arrow columns, DDL output types, the byte budget per
-Python call, and the one-row-per-anchor outlinks expansion."""
+Python call, the one-row-per-anchor outlinks expansion, and the
+once-per-worker import set-up (functions/udf.worker_once)."""
 
 from __future__ import annotations
 
 import datetime
+import json
+import sys
+import zipfile
 
 import pyarrow as pa
 import pytest
@@ -18,7 +22,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from htmlcleanup_spark.functions.udf import _doc_kernel, doc_map
+from htmlcleanup_spark.functions.udf import _doc_kernel, doc_map, worker_once
 
 OUT = to_arrow_schema(StructType([
     StructField("n", IntegerType()),
@@ -132,3 +136,65 @@ def test_outlinks_keep_seq_order_through_inline(spark):
             for doc, html, base in pages for link in outlinks_of(html, base)]
     assert got == want
     assert [r[1] for r in got] == [0, 1, 2, 0, 1]
+
+
+@pytest.mark.spark
+def test_worker_once_freezes_only_spark_archives(spark, tmp_path):
+    """After a doc_map task starts, the worker's importers over Spark's own
+    archives keep their directory; an addPyFile zip keeps the stock
+    importer; a pyspark module no stage loaded before still imports, under
+    a frozen importer; and a pandas_udf stage after the mapInArrow stage
+    returns the right rows."""
+    from pyspark.sql import functions as F
+
+    probe = tmp_path / "hc_worker_probe.zip"
+    with zipfile.ZipFile(probe, "w") as z:
+        z.writestr("hc_worker_probe.py", "VALUE = 42\n")
+    spark.sparkContext.addPyFile(str(probe))
+
+    def report(_):
+        # in a worker, inside a doc_map task: the kinds of zip importers it
+        # caches, split by whether the archive lies in Spark's install
+        import os
+        import zipimport
+
+        import hc_worker_probe  # from the addPyFile zip
+        import pyspark.ml.linalg as la  # not loaded by any other stage
+
+        home = os.path.join(os.path.realpath(os.environ["SPARK_HOME"]), "")
+        kinds = {"spark": set(), "user": set()}
+        for imp in list(sys.path_importer_cache.values()):
+            if isinstance(imp, zipimport.zipimporter):
+                owner = ("spark" if os.path.realpath(imp.archive).startswith(home)
+                         else "user")
+                kinds[owner].add(type(imp).__name__)
+        return json.dumps({
+            "spark": sorted(kinds["spark"]),
+            "user": sorted(kinds["user"]),
+            "ml_loader": type(la.__spec__.loader).__name__,
+            "dot": la.DenseVector([1.0, 2.0]).dot([3.0, 4.0]),
+            "probe": hc_worker_probe.VALUE,
+        }, sort_keys=True)
+
+    df = spark.range(0, 8, numPartitions=4).selectExpr("id", "'x' AS s")
+    reports = {r.report for r in doc_map(
+        df, report, ["s"], "report string").collect()}
+    assert [json.loads(r) for r in reports] == [{
+        "spark": ["_SparkArchiveImporter"],
+        "user": ["zipimporter"],
+        "ml_loader": "_SparkArchiveImporter",
+        "dot": 11.0,
+        "probe": 42,
+    }]
+
+    doubled = F.pandas_udf(lambda v: v * 2, "long")
+    got = spark.range(0, 200, numPartitions=4).select(
+        doubled("id").alias("d")).collect()
+    assert sorted(r.d for r in got) == list(range(0, 400, 2))
+
+
+def test_worker_once_is_a_no_op_in_the_driver():
+    cache, hooks = dict(sys.path_importer_cache), list(sys.path_hooks)
+    worker_once()
+    assert sys.path_hooks == hooks
+    assert sys.path_importer_cache == cache
