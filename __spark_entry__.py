@@ -168,8 +168,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused docs->pairs plan: ONE shuffle total (the band-bucket
-    # self-join; minhash_wide is a pure projection); same semantics as
-    # lsh_candidate_pairs(minhash_signatures(df)) and the same oracle.
+    # self-join; minhash_wide is a pure projection); the oracle bands the
+    # minhash_signatures rows.
     return dedup.minhash_lsh_pairs(_docs(spark, sf_dir))
 
 
@@ -1432,11 +1432,10 @@ def q_training_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session aggregate via Spark's NATIVE session_window (one
-    shuffle, sessions merged in aggregation buffers; identical code runs
-    streaming — parity-tested).  The oracle derives the same sessions
-    from the lag/running-sum construction, so the native operator's merge
-    semantics (exact-gap merges) are value-checked against the relational
-    definition."""
+    shuffle, sessions merged in aggregation buffers).  The oracle derives
+    the same sessions from the lag/running-sum construction, so the native
+    operator's merge semantics (exact-gap merges) are value-checked against
+    the relational definition."""
     from htmlcleanup_spark.operators.sessions import session_rollup
 
     return session_rollup(spark.read.parquet(_t(sf_dir, "events")))
@@ -1984,7 +1983,8 @@ def q_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 13 == 0, F.lit(" casino gambling"))
         .otherwise(F.lit("")),
     )
-    return badwords_filter(d.select("doc_id", text.alias("text")))
+    return badwords_filter(d.select("doc_id", text.alias("text"))).select(
+        "doc_id", "n_flagged", "flagged_frac_e6", "keep")
 
 
 def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2183,9 +2183,8 @@ def q_training_corpus_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hosts_ok = host_quality(pages).filter("host_keep").select("host")
     s1 = pages.join(F.broadcast(hosts_ok), "host")
-    s2 = _phase_pin(s1.join(
-        badwords_filter(s1).filter("keep").select("doc_id"), "doc_id"
-    ).select("doc_id", "text"))
+    s2 = _phase_pin(
+        badwords_filter(s1).filter("keep").select("doc_id", "text"))
     nll = stupid_backoff_nll(s2)
     s3 = s2.join(
         nll.filter(F.col("nll_e6") <= _V4_NLL_MAX).select("doc_id"),

@@ -18,10 +18,16 @@ rule:
   objects at once;
 - carried columns go back as the same Arrow arrays, never through Python.
 
+Spark itself already cuts every JVM->Python batch at
+``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB by default); the
+32 MB budget per call is the tighter of the two.  Row caps on the batches
+(``plan_extract``'s 64 rows) are set for the workers' peak RSS, not to
+keep a batch under either byte bound.
+
 Every function the package ships to Python workers (this shell, the ANN
-scorers, the WARC/CDX readers, the streaming state functions, the
-synthetic-page map) first calls :func:`worker_once`, which makes PySpark's
-per-task import-cache reset cheap for the rest of the worker's life.
+scorers, the WARC/CDX readers, the synthetic-page map: 14 call sites)
+first calls :func:`worker_once`, which makes PySpark's per-task
+import-cache reset cheap for the rest of the worker's life.
 """
 
 from __future__ import annotations

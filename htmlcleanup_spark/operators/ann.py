@@ -22,9 +22,8 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.udf import worker_once
@@ -452,105 +451,6 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
 
 
 # ---------------------------------------------------------------------------
-# IVF on-disk index: embeddings partitioned by list_id -> pruned scans
-# ---------------------------------------------------------------------------
-
-def ivf_build_index(embeddings: DataFrame, path: str, n_centroids: int = 16,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    quantizer: str = "sample") -> None:
-    """Materialize the IVF index as a parquet table PARTITIONED BY list_id.
-
-    This is the physical layout the ivf_cosine_topk docstring promises at
-    corpus scale: a probe for lists {3, 7} becomes a partition filter, so
-    the scan READS only those directories instead of filtering rows — the
-    difference between touching nprobe/n_centroids of the bytes and
-    touching all of them.  The quantizer is stored alongside as a tiny
-    parquet dataset (``_centroids/``) written through Spark, so the index
-    is self-contained on ANY storage the parquet writer supports (HDFS,
-    S3, ...), not just the driver's local POSIX disk; underscore-prefixed
-    paths are invisible to the main table scan (Hadoop hidden-path rule).
-    """
-    cents = _quantizer(embeddings, quantizer, n_centroids, id_col, vec_col)
-    indexed = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        F.element_at(_assign_udf(cents, 1)(F.col(vec_col)), 1)
-        .alias("list_id"),
-    )
-    indexed.write.mode("overwrite").partitionBy("list_id").parquet(path)
-    spark = embeddings.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in cents[i]]) for i in range(len(cents))
-    ]
-    (
-        spark.createDataFrame(cent_rows, "cid int, centroid array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path.rstrip("/") + "/_centroids")
-    )
-
-
-def load_ivf_centroids(spark: SparkSession, path: str):
-    """The stored quantizer of an ivf_build_index layout as numpy [C, dim]."""
-    rows = spark.read.parquet(path.rstrip("/") + "/_centroids").collect()
-    rows.sort(key=lambda r: r["cid"])
-    return np.stack([np.asarray(r["centroid"], dtype=np.float64)
-                     for r in rows])
-
-
-def ivf_search_index(spark: SparkSession, path: str, queries: DataFrame,
-                     k: int = 10, nprobe: int = 4,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     round_to: int = 4) -> DataFrame:
-    """Search an ivf_build_index layout; the probe-list filter is a
-    PartitionFilter on the scan (asserted by tests/test_ann.py), so only
-    the probed inverted lists are read from storage.
-
-    Queries are the small side by construction, so they are collected once
-    and both the per-query probe lists AND the global probe set are
-    computed driver-side from the stored quantizer — zero extra Spark
-    jobs before the single search job.  Per-query restriction to ITS OWN
-    lists happens in the join, as in ivf_cosine_topk.
-    """
-    cents = load_ivf_centroids(spark, path)
-    corp = spark.read.parquet(path)
-
-    qrows = queries.select("query_id", "query_vec").collect()
-    Qm = np.stack(
-        [np.asarray(r["query_vec"], dtype=np.float64) for r in qrows]
-    )
-    Qn = Qm / (np.linalg.norm(Qm, axis=1, keepdims=True) + 1e-12)
-    top = np.argsort(-(Qn @ cents.T), axis=1, kind="stable")[:, :nprobe]
-    q = spark.createDataFrame(
-        [
-            (r["query_id"], list(r["query_vec"]), int(lid))
-            for r, lids in zip(qrows, top)
-            for lid in lids
-        ],
-        queries.select("query_id", "query_vec").schema.add(
-            "list_id", T.IntegerType()
-        ),
-    )
-    probe_lists = sorted({int(x) for x in top.ravel()})
-    # plain IN-list predicate on the partition column -> partition pruning
-    corp = corp.filter(F.col("list_id").isin(probe_lists)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"),
-        "list_id",
-    )
-    cands = q.join(corp, "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = _pair_scored_cut(
-        cands, k, 1.5 / (10 ** round_to),
-        queries.schema["query_id"].dataType.simpleString(),
-        corp.schema["neighbor_id"].dataType.simpleString(),
-    )
-    return _rank_scored(scored, k, round_to, score_col="cosine",
-                        in_col="_raw")
-
-
-# ---------------------------------------------------------------------------
 # Product quantization (PQ) + asymmetric distance computation (ADC)
 # ---------------------------------------------------------------------------
 
@@ -791,68 +691,6 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     qids, lut = _pq_query_luts(queries, cb)
     qid_t = queries.schema["query_id"].dataType.simpleString()
     nid_t = embeddings.schema[id_col].dataType.simpleString()
-    scored = _pq_scored(codes, qids, lut, k, 1.5 / (10 ** round_to),
-                        qid_t, nid_t)
-    return _rank_scored(scored, k, round_to)
-
-
-def pq_build_index(embeddings: DataFrame, path: str, m: int = 8,
-                   n_codes: int = 16, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> None:
-    """Materialize the PQ index: the CODES table (id + m small ints — the
-    64x-compressed corpus) as parquet, with the codebooks stored
-    alongside as a tiny Spark-written parquet dataset (``_codebooks/``,
-    hidden from the main scan by the Hadoop underscore rule — the same
-    self-contained-on-any-storage layout as ivf_build_index).
-
-    At corpus scale this is the difference between scanning 256 bytes
-    and 8 bytes per row at query time: searches read ONLY this index,
-    never the raw embedding table.
-    """
-    cb = pq_codebooks(embeddings, m, n_codes, id_col, vec_col)
-    pq_encode(embeddings, cb, id_col, vec_col).withColumnRenamed(
-        "neighbor_id", id_col
-    ).write.mode("overwrite").parquet(path)
-    spark = embeddings.sparkSession
-    rows = [
-        (int(j), int(c), [float(x) for x in cb[j, c]])
-        for j in range(cb.shape[0])
-        for c in range(cb.shape[1])
-    ]
-    (
-        spark.createDataFrame(
-            rows, "j int, code int, subvec array<double>"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path.rstrip("/") + "/_codebooks")
-    )
-
-
-def pq_search_index(spark: SparkSession, path: str, queries: DataFrame,
-                    k: int = 10, id_col: str = "vec_id",
-                    round_to: int = 4) -> DataFrame:
-    """ADC top-k over a pq_build_index layout: loads the stored codebooks
-    (tiny), builds per-query LUTs driver-side, and scores the CODES
-    parquet — the raw embedding table is never touched.  Same ranking
-    contract as pq_topk (score DESC, neighbor ASC, round-then-rank).
-    Scoring keeps only LOCAL top-k candidates per Arrow batch (the
-    cosine_topk cut), so the pre-window shuffle is ~batches * Q * k rows,
-    never N * Q."""
-    rows = spark.read.parquet(path.rstrip("/") + "/_codebooks").collect()
-    m = 1 + max(r["j"] for r in rows)
-    n_codes = 1 + max(r["code"] for r in rows)
-    d_sub = len(rows[0]["subvec"])
-    cb = np.zeros((m, n_codes, d_sub))
-    for r in rows:
-        cb[r["j"], r["code"]] = np.asarray(r["subvec"], dtype=np.float64)
-
-    qids, lut = _pq_query_luts(queries, cb)
-    qid_t = queries.schema["query_id"].dataType.simpleString()
-    codes = spark.read.parquet(path).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    nid_t = codes.schema["neighbor_id"].dataType.simpleString()
     scored = _pq_scored(codes, qids, lut, k, 1.5 / (10 ** round_to),
                         qid_t, nid_t)
     return _rank_scored(scored, k, round_to)

@@ -385,13 +385,14 @@ BADWORD_MARKERS = (
 
 
 def badwords_filter(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
                     words: tuple[str, ...] = BADWORD_MARKERS) -> DataFrame:
     """The C4 bad-words page rule (Raffel et al. 2020 §2.2: drop any
     page containing a word from the public LDNOOBW list), as a SOFT
-    score + hard verdict: (id, n_flagged, flagged_frac_e6, keep) with
-    keep = zero flagged tokens — the C4 semantics; downstream can
-    instead threshold the fraction (the CCNet-style soft policy).
+    score + hard verdict.  Returns ``df``'s columns followed by
+    (n_flagged, flagged_frac_e6, keep) with keep = zero flagged tokens —
+    the C4 semantics, so a gate is ``badwords_filter(df).filter("keep")``;
+    downstream can instead threshold the fraction (the CCNet-style soft
+    policy).
 
     Matching is whole-token on the whitespace split, lowercased —
     substring matching ("classic" contains...) is exactly the C4
@@ -407,13 +408,13 @@ def badwords_filter(df: DataFrame, text_col: str = "text",
     # columns reference it, and filter() lambdas have no CSE — the whole
     # token scan would run three times per row otherwise
     base = df.select(
-        id_col,
+        "*",
         F.size(flagged).alias("_n"),
         F.size(ws).alias("_nw"),
     )
     n = F.col("_n")
     return base.select(
-        id_col,
+        *df.columns,
         n.alias("n_flagged"),
         F.floor(
             n.cast("double")

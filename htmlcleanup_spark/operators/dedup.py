@@ -187,42 +187,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     ).select(id_col, "jh.hash_id", "jh.minhash")
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        bands: int = 4, rows_per_band: int = 2,
-                        max_bucket_size: int | None = None) -> DataFrame:
-    """Band-bucket join: docs agreeing on all rows of any band.
-
-    signatures: output of minhash_signatures with num_hashes =
-    bands * rows_per_band.  Returns distinct (id_a, id_b) with id_a < id_b.
-    ``max_bucket_size`` caps the m^2 hot-bucket tail (_drop_hot_buckets).
-    """
-    banded = (
-        signatures.withColumn(
-            "band", (F.col("hash_id") / rows_per_band).cast("int")
-        )
-        .groupBy(id_col, "band")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_list("minhash")))).alias("band_key"))
-    )
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, ["band", "band_key"],
-                                   max_bucket_size)
-    # Pin: both sides of the self-join read this; without it Spark
-    # recomputes the whole shingle->minhash lineage twice.
-    banded = _pin(banded)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), "band", "band_key"
-    )
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _banded_from_wide(wide: DataFrame, id_col: str, bands: int,
                       rows_per_band: int) -> DataFrame:
     """Map-side band keys from a wide signature: (id, band, band_key),
@@ -256,15 +220,17 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       max_bucket_size: int | None = None) -> DataFrame:
     """Fused MinHash+LSH candidate pairs straight from documents.
 
-    Same result as ``lsh_candidate_pairs(minhash_signatures(df))`` but band
-    keys are computed map-side from the wide signature (sorted rows within
-    each band, matching the oracle's ORDER BY minhash), and minhash_wide
-    itself is a pure projection, so the whole docs -> candidate-pairs
-    pipeline shuffles exactly ONCE at any scale: the band-bucket self-join
-    (vs four for the unfused rows-format plan).  ``max_bucket_size`` caps
-    the m^2 hot-bucket tail (_drop_hot_buckets) — the dial to set at
-    10^12 docs, where one degenerate band key (e.g. boilerplate-only
-    pages) otherwise emits a near-cartesian pair explosion.
+    Docs agreeing on all rows of any band of their minhash signature,
+    as distinct (id_a, id_b) with id_a < id_b.  Band keys are computed
+    map-side from the wide signature (sorted rows within each band,
+    matching the oracle's ORDER BY minhash), and minhash_wide itself is a
+    pure projection, so the whole docs -> candidate-pairs pipeline
+    shuffles exactly ONCE at any scale: the band-bucket self-join (vs
+    four for a band groupBy over ``minhash_signatures`` rows).
+    ``max_bucket_size`` caps the m^2 hot-bucket tail (_drop_hot_buckets)
+    — the dial to set at 10^12 docs, where one degenerate band key (e.g.
+    boilerplate-only pages) otherwise emits a near-cartesian pair
+    explosion.
     """
     wide = minhash_wide(df, text_col, id_col, k,
                         num_hashes=bands * rows_per_band)

@@ -595,8 +595,7 @@ _TEXT_HEX_RE = "^(0[9AD]|[2-6][0-9A-F]|7[0-9AE])*$"
 
 
 def mime_sniff(df: DataFrame, payload_col: str = "payload",
-               id_col: str = "doc_id", prefix_bytes: int = 32,
-               keep_cols: tuple = ()) -> DataFrame:
+               id_col: str = "doc_id", prefix_bytes: int = 32) -> DataFrame:
     """Content-type sniffing over opaque binary payloads — the routing
     step of a mixed-media crawl (WARC payloads carry server-declared
     Content-Type headers that are wrong often enough that every real
@@ -610,12 +609,9 @@ def mime_sniff(df: DataFrame, payload_col: str = "payload",
     class match — no decode, no invalid-UTF8 risk), else
     application/octet-stream.
 
-    Returns (id, mime, sniff_hex, n_bytes, *keep_cols) — ``keep_cols``
-    carries extra input columns through so a downstream router can keep
-    the payload without a re-join (load-bearing under Structured
-    Streaming, where a join-back would need watermarks).  Pure column
-    expressions — zero shuffles, codegen-resident; composes as the
-    partition key for a by-modality write."""
+    Returns (id, mime, sniff_hex, n_bytes).  Pure column expressions —
+    zero shuffles, codegen-resident; composes as the partition key for a
+    by-modality write."""
     from pyspark.sql import functions as F
 
     hx = F.hex(F.substring(F.col(payload_col), 1, prefix_bytes))
@@ -633,5 +629,4 @@ def mime_sniff(df: DataFrame, payload_col: str = "payload",
         mime.alias("mime"),
         hx.alias("sniff_hex"),
         F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        *keep_cols,
     )

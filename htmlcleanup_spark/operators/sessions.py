@@ -56,10 +56,7 @@ def session_rollup(df: DataFrame, user_col: str = "user_id",
     Why the native operator matters at scale: session_window is a
     first-class aggregation — one shuffle on the user key, sessions
     merged inside the aggregation buffers (no per-user sort + two window
-    passes), and IDENTICAL code runs under Structured Streaming with a
-    watermark bounding state (see streaming/extract_stream.py's
-    sessions_stream) — the batch/stream parity test holds it to this
-    batch result.
+    passes).
 
     ``value_col`` names the measure to sum per session (emitted as
     ``sum_value``); pass None — or a column the frame lacks — to roll up

@@ -44,6 +44,7 @@ import argparse
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -140,12 +141,13 @@ def plan_extract(
         num_partitions = 2 * spark.sparkContext.defaultParallelism
     df = partition_for_cascade(df, num_partitions)
 
-    # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
-    # ~0.5 MB pages would put gigabytes in flight per task.  The shell also
-    # slices by bytes (functions/udf.py), but that can only split batches
-    # it has already received.  At two tasks per core a 256-row cap let
-    # one batch hold a whole partition and raised the workers' peak RSS by
-    # 4%; 64 rows kept it within 2% at the same CPU.
+    # Cap rows per JVM->Python Arrow batch for the workers' peak RSS.  The
+    # bytes are bounded already: Spark cuts each batch at
+    # spark.sql.execution.arrow.maxBytesPerBatch (64 MiB by default) and
+    # the shell slices it to 32 MB per Python call (functions/udf.py).  At
+    # two tasks per core a 256-row cap let one batch hold a whole
+    # partition and raised the workers' peak RSS by 4%; 64 rows kept it
+    # within 2% at the same CPU.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 
     return clean_pages(df, rules)
@@ -228,7 +230,10 @@ def _read_done(spark: SparkSession, output_path: str,
     try:
         src = snap if snap is not None else output_path + "/data"
         done = spark.read.parquet(src).select("url", "error")
-    except Exception:
+    except AnalysisException:
+        # No committed output yet: no path, or a data/ holding only an
+        # uncommitted _temporary.  Any other failure (a corrupt file) must
+        # stop the run, or resume would re-clean and re-append every url.
         return None
     if retry_errors:
         done = done.filter(F.col("error").isNull())

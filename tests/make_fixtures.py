@@ -13,6 +13,10 @@ hand-written fixtures are too few to notice a change, and it is computed
 from a file, not from a second copy of the engine, so it catches a change
 that a self-built twin would reproduce.
 
+It also refreshes (or verifies) the oracle-SQL digest: one sha256 per
+query over the text ``__spark_entry__.oracle_sql()`` returns for it, so a
+change to an unchanged query's oracle shows up as a named drift.
+
 Usage: python tests/make_fixtures.py [--check]
 """
 
@@ -30,6 +34,7 @@ from htmlcleanup_spark.engine.rules import RuleConfig  # noqa: E402
 
 FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
 DIGEST_PATH = os.path.join(FIXTURE_DIR, "engine-digest.txt")
+ORACLE_DIGEST_PATH = os.path.join(FIXTURE_DIR, "oracle-sql.sha256")
 
 # Digest inputs: make_html pages in the generator's 90/9/1 size mix (small
 # under 10 KB, medium under 100 KB, giant above), and seeded tag soups, the
@@ -271,8 +276,18 @@ def engine_digest() -> list:
     ]
 
 
-def read_digest() -> list:
-    with open(DIGEST_PATH) as f:
+def oracle_digest() -> list:
+    """["<query> <sha256>", ...] over __spark_entry__.oracle_sql()."""
+    import __spark_entry__
+
+    return [
+        "%s %s" % (name, hashlib.sha256(sql.encode("utf-8")).hexdigest())
+        for name, sql in __spark_entry__.oracle_sql().items()
+    ]
+
+
+def read_digest(path: str = DIGEST_PATH) -> list:
+    with open(path) as f:
         return f.read().splitlines()
 
 
@@ -307,14 +322,15 @@ def main(check_only: bool = False) -> int:
                 f.write(result.text)
             print("== %s/%s" % (rule_dir, nn))
             print(result.text)
-    digest = engine_digest()
-    if check_only:
-        for name in digest_diffs(read_digest(), digest):
-            print("DIGEST DRIFT %s" % name)
-            n_bad += 1
-    else:
-        with open(DIGEST_PATH, "w") as f:
-            f.write("\n".join(digest) + "\n")
+    for path, digest in ((DIGEST_PATH, engine_digest()),
+                         (ORACLE_DIGEST_PATH, oracle_digest())):
+        if check_only:
+            for name in digest_diffs(read_digest(path), digest):
+                print("DIGEST DRIFT %s %s" % (os.path.basename(path), name))
+                n_bad += 1
+        else:
+            with open(path, "w") as f:
+                f.write("\n".join(digest) + "\n")
     return n_bad
 
 

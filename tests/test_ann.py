@@ -216,27 +216,6 @@ def test_cosine_topk_string_ids(spark):
     assert all(r.query_id != r.neighbor_id for r in rows)
 
 
-def test_ivf_index_partition_pruning(spark, tmp_path):
-    """The on-disk IVF layout must turn probe lists into PartitionFilters
-    (reading only the probed directories) and return exactly the same
-    rows as the in-memory ivf_cosine_topk at the same settings."""
-    from htmlcleanup_spark.operators import ann
-
-    emb, qs = _emb_queries(spark)
-    path = str(tmp_path / "ivf_idx")
-    ann.ivf_build_index(emb, path, n_centroids=16)
-    got = ann.ivf_search_index(spark, path, qs, k=10, nprobe=4)
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "list_id" in pf[0], plan
-    mem = ann.ivf_cosine_topk(emb, qs, k=10, n_centroids=16, nprobe=4)
-    a = {(r.query_id, r.neighbor_id, r.cosine, r.rank) for r in got.collect()}
-    b = {(r.query_id, r.neighbor_id, r.cosine, r.rank) for r in mem.collect()}
-    assert a == b and len(a) > 0
-
-
 # ---------------------------------------------------------------------------
 # Product quantization + ADC
 # ---------------------------------------------------------------------------
@@ -355,38 +334,6 @@ def test_pq_recall_floor_planted(spark):
     )
     top = {r["neighbor_id"] for r in pq_topk(emb, q, k=5).collect()}
     assert len(top & {60, 61, 62, 63, 64}) >= 4
-
-
-def test_pq_index_search_matches_in_memory(spark, tmp_path):
-    """pq_search_index over the on-disk codes parquet == pq_topk on the
-    raw embeddings (same codebooks by construction), and the search scan
-    reads ONLY the codes table (no embedding column anywhere)."""
-    import numpy as np
-
-    from htmlcleanup_spark.operators.ann import (
-        pq_build_index,
-        pq_search_index,
-        pq_topk,
-    )
-
-    rng = np.random.RandomState(5)
-    emb = spark.createDataFrame(
-        [(i, rng.randn(64).tolist()) for i in range(70)],
-        "vec_id bigint, embedding array<double>",
-    )
-    q = spark.createDataFrame(
-        [(i + 500, rng.randn(64).tolist()) for i in range(4)],
-        "query_id bigint, query_vec array<double>",
-    )
-    path = str(tmp_path / "pq_index")
-    pq_build_index(emb, path)
-    from_index = pq_search_index(spark, path, q, k=6)
-    in_memory = pq_topk(emb, q, k=6)
-    assert sorted(map(tuple, from_index.collect())) == sorted(
-        map(tuple, in_memory.collect())
-    )
-    plan = from_index._jdf.queryExecution().executedPlan().toString()
-    assert "embedding" not in plan  # the raw vectors are never scanned
 
 
 # ---------------------------------------------------------------------------

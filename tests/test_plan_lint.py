@@ -14,6 +14,9 @@ the 100-TB design rules:
 - **Global windows (empty PARTITION BY) only where a docstring documents
   a bound or a windowless corpus path** — a global window is a single
   sort task at corpus scale, and AQE cannot split window partitions.
+- **No package code that only tests run** — every public top-level
+  function or class in ``htmlcleanup_spark/`` is referenced by code
+  outside ``tests/`` (no Spark needed for this one).
 
 The allowlist below is not an exemption from the rule but an index of the
 documented exceptions; each entry cites why the plan is safe.  A new query
@@ -23,13 +26,15 @@ window or documents + allowlists the bound.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+REPO = os.path.join(os.path.dirname(__file__), "..")
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -84,6 +89,94 @@ MAP_IN_PANDAS_ALLOWED = {
     "warc_ingest": "warc: file-to-records reader",
     "cdx_generate": "warc/cdx: file-to-records reader",
 }
+
+
+# Public package names that only tests reference: name -> why it stays.
+TEST_ONLY_ALLOWED = {
+    # Reference outputs derived from the page recipe, not by running the
+    # operator: the tests compare the operator against them.
+    "expected_outlinks": "reference output for links.outlinks_of",
+    "expected_main_content": "reference output for maincontent",
+    "expected_pdf_text": "reference output for pdf.pdf_text",
+    # Helpers the tests build their inputs with; moved into tests/ they
+    # would be the same code.
+    "parse_warc_records": "bytes-level wrapper the WARC grammar tests use",
+    "write_bucketed": "writes the bucketed tables of the join-plan tests",
+    # The extract job's output reader (either sink layout).
+    "read_extracted": "reads back run_extract's output",
+    # Callable surfaces no job or query runs yet: each is to be wired in
+    # or deleted (ROADMAP item 5).
+    "changed_pages": "crawl_diff consumer; no incremental job uses it",
+    "dsir_select": "dsir_weights consumer; no recipe selects by it",
+    "expire_snapshots": "merge-sink retention; no job schedules it",
+    "fetch_warc_ranges": "fetch_plan executor; no query reads WARC ranges",
+    "read_cdx": "CDXJ shard reader; queries parse in-memory lines",
+    "to_cdxj_lines": "CDXJ writer; only its round-trip test runs it",
+    "read_wet": "WET reader; only the write_wet round trip runs it",
+    "write_wet": "WET writer; no job writes WET segments",
+}
+
+
+def _source_files(top: str = REPO):
+    """Python files under ``top``, outside tests/."""
+    for root, dirs, files in os.walk(top):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__"))
+                   and d not in ("tests", "dist", "spark-warehouse")]
+        for f in files:
+            if f.endswith(".py"):
+                yield os.path.join(root, f)
+
+
+def _package_publics() -> dict:
+    """name -> module path of every public top-level def or class in the
+    package."""
+    out = {}
+    for path in _source_files(os.path.join(REPO, "htmlcleanup_spark")):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef))
+                    and not node.name.startswith("_")):
+                out[node.name] = os.path.relpath(path, REPO)
+    return out
+
+
+def _names_referenced() -> set:
+    """Every name a non-test file loads, reads as an attribute or imports.
+    A definition's references to its own name (recursion) and docstring
+    mentions do not count."""
+    refs = set()
+    for path in _source_files():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for top in tree.body:
+            own = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                if name != own:
+                    refs.add(name)
+    return refs
+
+
+def test_no_package_code_only_tests_run():
+    publics, refs = _package_publics(), _names_referenced()
+    offenders = sorted("%s (%s)" % (n, m) for n, m in publics.items()
+                       if n not in refs and n not in TEST_ONLY_ALLOWED)
+    assert offenders == [], (
+        "public names only tests reference: delete them, wire them in, or "
+        "allowlist them with a reason: %s" % offenders
+    )
+    stale = sorted(n for n in TEST_ONLY_ALLOWED
+                   if n not in publics or n in refs)
+    assert stale == [], "allowlist entries now gone or referenced: %s" % stale
 
 
 @pytest.fixture(scope="module")

@@ -136,6 +136,46 @@ def test_resume_antijoin_not_forced_broadcast(spark, tmp_path):
     assert "hint" not in logical.lower()
 
 
+def test_read_done_none_only_without_committed_output(spark, tmp_path):
+    """No committed output (no path, or a data/ holding only an
+    uncommitted _temporary) is a fresh start; nothing else is."""
+    from htmlcleanup_spark.plans.extract import _read_done
+
+    assert _read_done(spark, str(tmp_path / "absent")) is None
+    (tmp_path / "partial" / "data" / "_temporary" / "0").mkdir(parents=True)
+    assert _read_done(spark, str(tmp_path / "partial")) is None
+
+
+def test_resume_over_corrupt_output_raises_and_appends_nothing(spark,
+                                                               tmp_path):
+    """A done set that cannot be read must stop the run: treating it as a
+    fresh output would re-clean every url and append a second copy."""
+    from py4j.protocol import Py4JJavaError
+
+    from htmlcleanup_spark.plans.extract import run_extract
+    from htmlcleanup_spark.sources.pages import synth_pages
+
+    out = str(tmp_path / "out")
+    pages = synth_pages(spark, 6, num_partitions=1)
+    run_extract(spark, pages, output_path=out, num_partitions=2)
+    data = tmp_path / "out" / "data"
+    parts = sorted(data.glob("part-*.parquet"))
+    saved = {}
+    for part in parts:
+        raw = part.read_bytes()
+        saved[part] = raw
+        # footer length and magic overwritten: unreadable, not missing
+        # (the checksum sidecar goes, so the footer is what fails)
+        part.write_bytes(raw[:-8] + b"\xff" * 8)
+        (data / (".%s.crc" % part.name)).unlink()
+    with pytest.raises(Py4JJavaError):
+        run_extract(spark, pages, output_path=out, num_partitions=2)
+    assert sorted(data.glob("part-*.parquet")) == parts
+    for part, raw in saved.items():
+        part.write_bytes(raw)
+    assert spark.read.parquet(str(data)).count() == 6
+
+
 def test_containment_plan_no_cartesian(spark):
     """The containment self-join must stay an equi-join on fp (hot keys
     capped): no CartesianProduct node, bounded exchanges downstream of the
@@ -567,6 +607,28 @@ def test_v3_repetition_gate_filters_in_place(spark, monkeypatch):
     assert "Join" not in gate, gate
     assert _re.search(r"Filter[^\n]*keep[^\n]*\n[ :]*\+- MapInArrow",
                       gate), gate
+
+
+def test_v4_badwords_gate_filters_in_place(spark, monkeypatch):
+    """training_corpus_v4's bad-words gate filters the host-gated pages in
+    place: the frame handed to _phase_pin joins on host only, with no join
+    back on doc_id."""
+    import re as _re
+
+    import __spark_entry__ as entry
+
+    pinned = []
+    real_pin = entry._phase_pin
+
+    def recording_pin(df):
+        pinned.append(df)
+        return real_pin(df)
+
+    monkeypatch.setattr(entry, "_phase_pin", recording_pin)
+    entry.q_training_corpus_v4(spark, SF)
+    gate = pinned[0]._jdf.queryExecution().executedPlan().toString()
+    assert _re.findall(r"Join \[(\w+)#", gate) == ["host"], gate
+    assert _re.search(r"Filter[^\n]*size\(filter\(split", gate), gate
 
 
 def test_ngram_stream_is_codegen(spark):
