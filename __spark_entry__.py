@@ -2278,7 +2278,7 @@ def q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cluster_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cluster.idx secondary index over the sorted synthetic capture
     log, one row per 40-line block (sources/cdx.cluster_index — the
-    distributed enumerate: range-sort, per-partition Arrow counter,
+    distributed enumerate: range-sort, per-partition row counter,
     driver prefix-sum of ~|partitions| counts broadcast back; never a
     global ROW_NUMBER window).  The oracle uses the SQL global window
     directly — correct at oracle scale, and exactly what the operator
@@ -3291,7 +3291,7 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdx_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDX index generation from WARC segments — the index-build job
-    that closes the WARC -> CDX -> ranged-fetch loop (read_cdx /
+    that closes the WARC -> CDX -> fetch-plan loop (parse_cdxj /
     fetch_plan consume what this emits).  Both fixture segments (plain
     + per-record gzip members) hold the same 40 records, so every
     capture appears twice with layout-specific coordinates: the gz
@@ -3823,7 +3823,7 @@ def _simhash_cte() -> str:
 
 def _lsh_bucket_cols_sql(vec_expr: str, dim: int = 64, bits: int = 8,
                          seed: int = 42, n_tables: int = 4) -> str:
-    """DuckDB twin of ann._bucket_udf: per-table bucket columns b0..b{L-1}.
+    """DuckDB twin of ann._with_buckets: per-table bucket columns b0..b{L-1}.
     The hyperplanes are deterministic md5-derived doubles, embedded as
     literals (repr round-trips to the identical IEEE double)."""
     from htmlcleanup_spark.operators.ann import plane_matrix
@@ -5113,7 +5113,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # the IVF path's SQL twin: same md5-sampled centroids, same
         # argmax-cosine assignment (ties -> lower cid, matching the stable
-        # argsort in ann._assign_udf), same probe-join and ranking
+        # argsort in ann._assign), same probe-join and ranking
         # SemDeDup: the IVF oracle's quantizer/assignment CTEs + a
         # within-cluster lower-id-witness join; keep = no witness
         "semdedup": """

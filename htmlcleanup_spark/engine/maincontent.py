@@ -16,8 +16,8 @@ the public jusText/boilerpipe family:
    promoted (headlines and pull-quotes ride with their article).
 
 Pure per-document function — in the Spark plan it occupies the same
-stateless-map slot as the cascade (zero shuffles), exposed via
-Arrow-batched ``mapInPandas`` in ``__spark_entry__.q_main_content``.
+stateless-map slot as the cascade (zero shuffles), run through the Arrow
+shell by ``operators/content.extract_main_content``.
 """
 
 from __future__ import annotations

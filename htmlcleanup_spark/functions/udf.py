@@ -1,21 +1,28 @@
-"""The per-document shell: every Python map of the engine crosses here.
+"""The Arrow shell: every Python map of the package crosses here.
 
-Spark hands the Python worker whole Arrow record batches; :func:`doc_map`
-runs a pure-Python function once per row and hands a batch back — zero
-per-row Spark<->Python dispatch (BASELINE.json:6).  Everything around it
-stays relational/JVM-side.  The extract cascade (:func:`clean_pages`), the
-text-signal gates, the decoders and header parsers, and the synthetic
-payload generators all use this one boundary, so they share one memory
-rule:
+Spark hands the Python worker whole Arrow record batches, and one kernel
+hands batches back — zero per-row Spark<->Python dispatch
+(BASELINE.json:6).  Everything around it stays relational/JVM-side.  The
+kernel has two entry points:
+
+- :func:`doc_map` runs a pure-Python function once per row: the extract
+  cascade (:func:`clean_pages`), the text-signal gates, the decoders and
+  header parsers, and the synthetic payload generators;
+- :func:`batch_map` runs a function once per slice of a batch and hands it
+  the slice's Arrow columns (:func:`vectors` turns an embedding column into
+  one NumPy matrix): the ANN scorers and assigners, and the WARC/CDX
+  file-to-records readers.
+
+Both share one memory rule:
 
 - each input batch is sliced so that no single Python call holds more than
   ``MAX_CALL_BYTES`` (32 MB) of string/binary argument bytes — a batch of
   64 KB pages is fine at 1024 rows, a batch of 0.5 MB pages is not.  Sizes
   come from the Arrow offsets; a single row larger than the budget is a
   slice of its own;
-- within a slice, the arguments reach Python one row at a time, so at most
-  one document's argument bytes plus the slice's results are Python
-  objects at once;
+- within a :func:`doc_map` slice, the arguments reach Python one row at a
+  time, so at most one document's argument bytes plus the slice's results
+  are Python objects at once;
 - carried columns go back as the same Arrow arrays, never through Python.
 
 Spark itself already cuts every JVM->Python batch at
@@ -24,10 +31,9 @@ Spark itself already cuts every JVM->Python batch at
 (``plan_extract``'s 64 rows) are set for the workers' peak RSS, not to
 keep a batch under either byte bound.
 
-Every function the package ships to Python workers (this shell, the ANN
-scorers, the WARC/CDX readers, the synthetic-page map: 14 call sites)
-first calls :func:`worker_once`, which makes PySpark's per-task
-import-cache reset cheap for the rest of the worker's life.
+The kernel first calls :func:`worker_once`, which makes PySpark's per-task
+import-cache reset cheap for the rest of the worker's life.  It has one
+other caller: the synthetic-page RDD map (``sources/pages.synth_pages``).
 """
 
 from __future__ import annotations
@@ -37,6 +43,7 @@ import sys
 import zipimport
 from typing import Callable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -131,37 +138,69 @@ def _is_bytes(t: pa.DataType) -> bool:
             or pa.types.is_large_string(t) or pa.types.is_large_binary(t))
 
 
-def _doc_kernel(fn: Callable, args: Sequence[str], carry: Sequence[str],
-                out: pa.Schema):
-    """The ``mapInArrow`` function behind :func:`doc_map`: Arrow batches of
-    (``carry`` ∪ ``args``) columns in, batches of ``carry`` + ``out``
-    columns out, one ``fn(*row)`` call per row."""
-    args, carry = list(args), list(carry)
+def _batch_kernel(fn: Callable, carry: Sequence[str], out: pa.Schema,
+                  sized: Sequence[str] | None = None):
+    """The ``mapInArrow`` function behind both entry points: each input
+    batch is cut into slices of at most ``MAX_CALL_BYTES`` of the ``sized``
+    columns' bytes (default: every string/binary column), and ``fn(slice)``
+    yields dicts of ``out`` columns; each dict becomes one batch of the
+    slice's ``carry`` columns + its ``out`` columns (so with ``carry``,
+    each dict must be row-aligned with the slice)."""
+    carry = list(carry)
     names = carry + out.names
-    single = len(out) == 1
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         worker_once()
         for batch in batches:
             schema = batch.schema
-            arg_idx = [schema.get_field_index(c) for c in args]
-            sized = [i for i in arg_idx if _is_bytes(schema.field(i).type)]
-            for chunk in _slice_by_bytes(batch, sized, MAX_CALL_BYTES):
-                res = [fn(*[v.as_py() for v in row])
-                       for row in zip(*(chunk.column(i) for i in arg_idx))]
-                cols = [res] if single else list(zip(*res)) or [[]] * len(out)
-                yield pa.RecordBatch.from_arrays(
-                    [chunk.column(c) for c in carry]
-                    + [pa.array(c, f.type) for c, f in zip(cols, out)],
-                    names=names,
-                )
+            idx = [i for i, f in enumerate(schema) if _is_bytes(f.type)
+                   and (sized is None or f.name in sized)]
+            for chunk in _slice_by_bytes(batch, idx, MAX_CALL_BYTES):
+                for cols in fn(chunk):
+                    yield pa.RecordBatch.from_arrays(
+                        [chunk.column(c) for c in carry]
+                        + [pa.array(cols[f.name], f.type) for f in out],
+                        names=names,
+                    )
 
     return run
 
 
+def _doc_kernel(fn: Callable, args: Sequence[str], carry: Sequence[str],
+                out: pa.Schema):
+    """The kernel behind :func:`doc_map`: Arrow batches of (``carry`` ∪
+    ``args``) columns in, batches of ``carry`` + ``out`` columns out, one
+    ``fn(*row)`` call per row."""
+    args = list(args)
+    single = len(out) == 1
+
+    def rows(chunk: pa.RecordBatch):
+        res = [fn(*[v.as_py() for v in row])
+               for row in zip(*(chunk.column(c) for c in args))]
+        cols = [res] if single else list(zip(*res)) or [[]] * len(out)
+        yield dict(zip(out.names, cols))
+
+    return _batch_kernel(rows, carry, out, sized=args)
+
+
+def _out_schema(df, out_ddl: str, carry: Sequence[str]):
+    """(Spark schema of the result, Arrow schema of the ``out_ddl``
+    columns) for a map that carries ``carry`` from ``df``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = StructType.fromDDL(out_ddl)
+    clash = set(carry) & set(out.names)
+    if clash:
+        raise ValueError("carried columns %s clash with outputs"
+                         % sorted(clash))
+    return (StructType([df.schema[c] for c in carry] + out.fields),
+            to_arrow_schema(out))
+
+
 def doc_map(df, fn: Callable, args: Sequence[str], out_ddl: str,
             carry: Sequence[str] = ()):
-    """Map ``fn`` over the rows of ``df``: the one Python crossing for
+    """Map ``fn`` over the rows of ``df``: the Python crossing for
     per-document work.
 
     ``fn(*row)`` receives the ``args`` columns of one row as Python values
@@ -173,20 +212,33 @@ def doc_map(df, fn: Callable, args: Sequence[str], out_ddl: str,
     more than ``MAX_CALL_BYTES`` of string/binary argument bytes (module
     docstring).  The map is stateless: no shuffle, and it pipelines into
     the neighbouring stages."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out = StructType.fromDDL(out_ddl)
-    clash = set(carry) & set(out.names)
-    if clash:
-        raise ValueError("doc_map: carried columns %s clash with outputs"
-                         % sorted(clash))
-    schema = StructType([df.schema[c] for c in carry] + out.fields)
+    schema, out = _out_schema(df, out_ddl, carry)
     # in df's own column order, so an input that is already just these
     # columns gets no extra projection
     used = set(carry) | set(args)
     return df.select(*[c for c in df.columns if c in used]).mapInArrow(
-        _doc_kernel(fn, args, carry, to_arrow_schema(out)), schema)
+        _doc_kernel(fn, args, carry, out), schema)
+
+
+def batch_map(df, fn: Callable, out_ddl: str, carry: Sequence[str] = ()):
+    """Map ``fn`` over whole slices of ``df``: the Python crossing for
+    vectorized work (matrix scorers, file-to-records readers).
+
+    ``fn(batch)`` receives a ``pyarrow.RecordBatch`` of all of ``df``'s
+    columns, holding at most ``MAX_CALL_BYTES`` of string/binary bytes
+    (one oversized row excepted), and yields zero or more dicts that map
+    each ``out_ddl`` column to a NumPy array or list; the DDL types them.
+    With ``carry``, ``fn`` must yield row-aligned columns: the result has
+    the slice's ``carry`` columns (passed through as the same Arrow
+    arrays) followed by the ``out_ddl`` columns.  No shuffle."""
+    schema, out = _out_schema(df, out_ddl, carry)
+    return df.mapInArrow(_batch_kernel(fn, carry, out), schema)
+
+
+def vectors(col: pa.Array) -> np.ndarray:
+    """A fixed-width ``array<float|double>`` column as an [n, dim] float64
+    matrix, without a Python object per row."""
+    return col.flatten().to_numpy().reshape(len(col), -1).astype(np.float64)
 
 
 def clean_pages(df, rules: RuleConfig = DEFAULT_RULES):

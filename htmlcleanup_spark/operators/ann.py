@@ -1,8 +1,10 @@
 """Similarity search over an embedding column (array<float>).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Scoring and bucket assignment are Arrow-batched numpy matmuls (one per
-  batch); interpreted zip_with/aggregate lambdas are 10-50x slower.
+  Scoring and bucket assignment are numpy matmuls, one per Arrow slice,
+  through the package's one Python boundary (``functions/udf.batch_map``:
+  whole columns in, column arrays out, no per-row conversion);
+  interpreted zip_with/aggregate lambdas are 10-50x slower.
 - ``lsh_cosine_topk``: the scale path — random-hyperplane LSH buckets the
   corpus so each query scores only its bucket (probing all single-bit
   neighbors too).  Hyperplanes are a deterministic function of (seed, dim):
@@ -20,36 +22,12 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.udf import worker_once
-
-
-def _cosine_np_udf():
-    """Arrow-vectorized cosine (numpy) — the hot path.
-
-    zip_with/aggregate lambdas are interpreted per element in Spark (no
-    codegen for higher-order functions), so for wide vectors a pandas_udf
-    doing one batched einsum beats the 'built-in' route by ~10-50x.
-    float64 math matches a SQL oracle's double arithmetic to ~1 ulp; results
-    are rounded downstream.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(q: pd.Series, v: pd.Series) -> pd.Series:
-        worker_once()
-        qa = np.stack(q.to_numpy()).astype(np.float64)
-        va = np.stack(v.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", qa, va)
-        den = np.linalg.norm(qa, axis=1) * np.linalg.norm(va, axis=1)
-        return pd.Series(num / den)
-
-    return cos
+from ..functions.udf import batch_map, vectors
 
 
 def _local_topk_frame(ids, S, qids, k: int, slack: float,
@@ -60,8 +38,8 @@ def _local_topk_frame(ids, S, qids, k: int, slack: float,
     and keeps only rows within ``slack`` below it — the bounded candidate
     set whose final round + (score desc, id asc) window provably selects
     the identical rows the full cross product would (see cosine_topk's
-    docstring for the slack argument).  Returns a pandas DataFrame
-    (query_id, neighbor_id, score_name) with only finite scores.
+    docstring for the slack argument).  Returns the columns (query_id,
+    neighbor_id, score_name) of the finite scores.
     """
     S = S.copy()
     S[ids[:, None] == qids[None, :]] = -np.inf
@@ -69,14 +47,10 @@ def _local_topk_frame(ids, S, qids, k: int, slack: float,
     kth = -np.partition(-S, keep_n - 1, axis=0)[keep_n - 1, :]
     mask = S >= (kth - slack)[None, :]
     rows, cols = np.nonzero(mask)
-    out = pd.DataFrame(
-        {
-            "query_id": qids[cols],
-            "neighbor_id": ids[rows],
-            score_name: S[rows, cols],
-        }
-    )
-    return out[np.isfinite(out[score_name].to_numpy())]
+    score = S[rows, cols]
+    fin = np.isfinite(score)
+    return {"query_id": qids[cols][fin], "neighbor_id": ids[rows][fin],
+            score_name: score[fin]}
 
 
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
@@ -90,7 +64,7 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     their input types (int, long, string, ... — the output schema is
     derived from the inputs, nothing is narrowed to long).
 
-    Scale design: the query matrix rides in the UDF closure (one copy per
+    Scale design: the query matrix rides in the map's closure (one copy per
     executor, the broadcast-dim-table pattern).  More than ``max_queries``
     queries are processed in chunks — one corpus pass per chunk, results
     unioned — so memory per executor stays bounded at ~max_queries * dim
@@ -127,18 +101,14 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         )
         Qn = Qm / (np.linalg.norm(Qm, axis=1, keepdims=True) + 1e-300)
 
-        def score_partition(batches, qids=qids, Qn=Qn):
-            worker_once()
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Vn = V / (np.linalg.norm(V, axis=1, keepdims=True) + 1e-300)
-                S = Vn @ Qn.T                          # [n, Q] raw cosines
-                yield _local_topk_frame(ids, S, qids, k, slack)
+        def score_partition(b, qids=qids, Qn=Qn):
+            ids = b.column(id_col).to_numpy(zero_copy_only=False)
+            V = vectors(b.column(vec_col))
+            Vn = V / (np.linalg.norm(V, axis=1, keepdims=True) + 1e-300)
+            S = Vn @ Qn.T                              # [n, Q] raw cosines
+            yield _local_topk_frame(ids, S, qids, k, slack)
 
-        part = corpus.mapInPandas(score_partition, scored_ddl)
+        part = batch_map(corpus, score_partition, scored_ddl)
         scored = part if scored is None else scored.unionByName(part)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -172,37 +142,33 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42):
 def plane_matrix(dim: int, bits: int = 8, seed: int = 42,
                  n_tables: int = 1):
     """The [n_tables * bits, dim] hyperplane matrix as float64 numpy
-    (shared by the Spark UDF and the SQL-oracle literal generator); table t
+    (shared by the bucket map and the SQL-oracle literal generator); table t
     owns rows t*bits .. (t+1)*bits - 1."""
     return np.array(_hyperplanes(dim, bits * n_tables, seed),
                     dtype=np.float64)
 
 
-def _bucket_udf(dim: int, bits: int = 8, seed: int = 42,
-                n_tables: int = 1):
-    """Batched hyperplane signatures for all tables: ONE numpy matmul per
-    Arrow batch returning array<int> of length n_tables (bit b of table t =
-    sign of vec . plane_{t*bits+b}).
+def _with_buckets(df: DataFrame, vec: str, dim: int, bits: int = 8,
+                  seed: int = 42, n_tables: int = 1) -> DataFrame:
+    """``df`` plus ``_buckets``, its hyperplane signatures for all tables:
+    ONE numpy matmul per Arrow slice (a :func:`batch_map` stage carrying
+    every column of ``df``) giving array<int> of length n_tables (bit b of
+    table t = sign of vec . plane_{t*bits+b}).
 
     This replaces the per-row interpreted zip_with/aggregate expression
-    (bits x dim interpreted lambda evaluations per row — the exact
-    anti-pattern _cosine_np_udf's docstring warns about; 10-50x slower).
-    The [n_tables*bits, dim] matrix rides in the UDF closure — one copy per
-    executor."""
-    from pyspark.sql.functions import pandas_udf
-
+    (bits x dim interpreted lambda evaluations per row, 10-50x slower).
+    The [n_tables*bits, dim] matrix rides in the map's closure — one copy
+    per executor."""
     P = plane_matrix(dim, bits, seed, n_tables)
     weights = (1 << np.arange(bits)).astype(np.int64)
 
-    @pandas_udf("array<int>")
-    def buckets(v: pd.Series) -> pd.Series:
-        worker_once()
-        va = np.stack(v.to_numpy()).astype(np.float64)
+    def buckets(b):
+        va = vectors(b.column(vec))
         signs = (va @ P.T) >= 0.0                # [n, n_tables*bits]
         sig = signs.reshape(len(va), n_tables, bits) @ weights
-        return pd.Series(list(sig.astype("int32")))
+        yield {"_buckets": list(sig.astype("int32"))}
 
-    return buckets
+    return batch_map(df, buckets, "_buckets array<int>", carry=df.columns)
 
 
 def _explode_tables(df: DataFrame, bucket_arr="_buckets",
@@ -240,25 +206,20 @@ def lsh_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     for both measured regimes.  Cost: candidates are deduplicated per
     (query, neighbor) BEFORE scoring, so each survivor is scored once.
     """
-    bucket_of = _bucket_udf(dim, bits, seed, n_tables)
-    corp = _explode_tables(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v"),
-            bucket_of(F.col(vec_col)).alias("_buckets"),
-        )
-    )
+    corp = _explode_tables(_with_buckets(
+        embeddings.select(F.col(id_col).alias("neighbor_id"),
+                          F.col(vec_col).alias("_v")),
+        "_v", dim, bits, seed, n_tables,
+    ))
     q = _explode_tables(
-        queries.select(
-            "query_id", "query_vec",
-            bucket_of(F.col("query_vec")).alias("_buckets"),
-        ),
+        _with_buckets(queries.select("query_id", "query_vec"), "query_vec",
+                      dim, bits, seed, n_tables),
         probe_bits=bits,
     )
     cands = (
         q.join(corp, ["table", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        # dedupe BEFORE the scoring UDF: a pair meeting in several
+        # dedupe BEFORE the scoring map: a pair meeting in several
         # tables/probes is scored exactly once
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -286,33 +247,40 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     (cosine >= 0.95) at the defaults; tune ``bits`` up at larger corpora to
     keep the candidate fraction (~ n_tables * (bits+1) / 2^bits of all
     pairs) down.  The recall floor on planted near-dups is asserted in
-    tests/test_ann.py."""
-    bucket_of = _bucket_udf(dim, bits, seed, n_tables)
-    withb = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        bucket_of(F.col(vec_col)).alias("_buckets"),
-    )
+    tests/test_ann.py.
+
+    Candidates are scored by :func:`_pair_threshold_cut`, as in
+    :func:`semdedup`: only pairs within the rounding slack of
+    ``threshold`` leave the scoring map, and the rounded comparison stays
+    in Spark.  A zero vector's cosine is NaN (0/0) and never a near-dup;
+    the DuckDB oracle agrees (0/0 is NULL there)."""
+    withb = _with_buckets(embeddings.select(id_col, vec_col), vec_col,
+                          dim, bits, seed, n_tables)
     a = _explode_tables(
         withb.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-            "_buckets",
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("query_vec"), "_buckets",
         ),
         probe_bits=bits if multi_probe else 0,
     )
     b = _explode_tables(
         withb.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v"),
             "_buckets",
         )
     )
-    cos = _cosine_np_udf()
-    return (
+    cands = (
         a.join(b, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])  # score each candidate pair once
-        .select(
-            "id_a", "id_b",
-            F.round(cos(F.col("va"), F.col("vb")), 4).alias("cosine"),
+        .filter(F.col("query_id") < F.col("neighbor_id"))
+        # score each candidate pair once
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    id_t = embeddings.schema[id_col].dataType.simpleString()
+    scored = _pair_threshold_cut(cands, threshold - 1.5e-4, id_t, id_t)
+    return (
+        scored.select(
+            F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"),
+            F.round(F.col("_raw"), 4).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -393,24 +361,45 @@ def _quantizer(embeddings: DataFrame, quantizer: str, n_centroids: int,
                      % (quantizer,))
 
 
-def _assign_udf(centroids, nprobe: int):
-    """pandas_udf: top-``nprobe`` nearest centroid ids (by cosine) for each
-    vector.  The [C, dim] matrix rides inside the serialized UDF closure —
-    one copy per executor (for large C use an explicit broadcast)."""
-    from pyspark.sql.functions import pandas_udf
+def _assign(df: DataFrame, vec: str, centroids, out: str, carry,
+            nprobe: int | None = None) -> DataFrame:
+    """``carry`` + ``out``: each row's nearest centroid id (by cosine) as
+    ``out int``, or with ``nprobe`` its ``nprobe`` nearest as ``out
+    array<int>`` — a :func:`batch_map` stage, one matmul per Arrow
+    slice.  The [C, dim] matrix rides in the map's closure — one copy per
+    executor (for large C use an explicit broadcast)."""
 
-    @pandas_udf("array<int>")
-    def assign(v: pd.Series) -> pd.Series:
-        worker_once()
-        va = np.stack(v.to_numpy()).astype(np.float64)
+    def assign(b):
+        va = vectors(b.column(vec))
         va = va / (np.linalg.norm(va, axis=1, keepdims=True) + 1e-12)
         sims = va @ centroids.T
         # stable sort: similarity ties break toward the LOWER centroid id,
         # matching the SQL oracle's ORDER BY sim DESC, cid ASC
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(top.astype("int32")))
+        top = np.argsort(-sims, axis=1, kind="stable")
+        yield {out: top[:, 0] if nprobe is None
+               else list(top[:, :nprobe].astype("int32"))}
 
-    return assign
+    ddl = "%s %s" % (out, "int" if nprobe is None else "array<int>")
+    return batch_map(df, assign, ddl, carry)
+
+
+def _ivf_candidates(embeddings: DataFrame, queries: DataFrame, centroids,
+                    nprobe: int, id_col: str = "vec_id",
+                    vec_col: str = "embedding") -> DataFrame:
+    """(query_id, query_vec, ..., neighbor_id, _v) pairs that meet in a
+    probed list: each corpus vector sits in its nearest list, each query
+    probes its ``nprobe`` nearest; self-matches are dropped."""
+    corp = _assign(
+        embeddings.select(F.col(id_col).alias("neighbor_id"),
+                          F.col(vec_col).alias("_v")),
+        "_v", centroids, "list_id", ["neighbor_id", "_v"],
+    )
+    q = _assign(queries, "query_vec", centroids, "_lists", queries.columns,
+                nprobe)
+    q = q.select("*", F.explode("_lists").alias("list_id")).drop("_lists")
+    return q.join(corp, "list_id").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
 
 
 def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
@@ -430,17 +419,8 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     instead of filtering rows.
     """
     cents = _quantizer(embeddings, quantizer, n_centroids, id_col, vec_col)
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v"),
-        F.element_at(_assign_udf(cents, 1)(F.col(vec_col)), 1)
-        .alias("list_id"),
-    )
-    q = queries.withColumn(
-        "list_id", F.explode(_assign_udf(cents, nprobe)(F.col("query_vec")))
-    )
-    cands = q.join(corp, "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
+    cands = _ivf_candidates(embeddings, queries, cents, nprobe, id_col,
+                            vec_col)
     scored = _pair_scored_cut(
         cands, k, 1.5 / (10 ** round_to),
         queries.schema["query_id"].dataType.simpleString(),
@@ -497,16 +477,11 @@ def pq_encode(embeddings: DataFrame, codebooks,
 
     This is the 64x memory compression that lets 10^12 embeddings sit in
     RAM: 8 bytes of codes instead of 256 bytes of floats per vector."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     cb = np.ascontiguousarray(codebooks)      # [m, C, d_sub]
     m, n_codes, d_sub = cb.shape
 
-    @pandas_udf("array<int>")
-    def enc(v: pd.Series) -> pd.Series:
-        worker_once()
-        V = np.stack(v.to_numpy()).astype(np.float64)
+    def enc(b):
+        V = vectors(b.column("_v"))
         V = V / (np.linalg.norm(V, axis=1, keepdims=True) + 1e-12)
         S = V.reshape(len(V), m, d_sub)
         # ||x - c||^2 per (row, subspace, codeword); argmin is stable ->
@@ -515,52 +490,59 @@ def pq_encode(embeddings: DataFrame, codebooks,
         d2 = (
             (S[:, :, None, :] - cb[None, :, :, :]) ** 2
         ).sum(axis=3)
-        return pd.Series(list(np.argmin(d2, axis=2).astype("int32")))
+        yield {"codes": list(np.argmin(d2, axis=2).astype("int32"))}
 
-    return embeddings.select(
-        F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")
+    return batch_map(
+        embeddings.select(F.col(id_col).alias("neighbor_id"),
+                          F.col(vec_col).alias("_v")),
+        enc, "codes array<int>", carry=["neighbor_id"],
     )
+
+
+def _pair_cosine(b) -> np.ndarray:
+    """Raw cosine of each (query_vec, _v) row of an Arrow slice."""
+    qa = vectors(b.column("query_vec"))
+    va = vectors(b.column("_v"))
+    num = np.einsum("ij,ij->i", qa, va)
+    den = np.linalg.norm(qa, axis=1) * np.linalg.norm(va, axis=1)
+    return num / den
 
 
 def _pair_scored_cut(cands: DataFrame, k: int, slack: float,
                      qid_t: str, nid_t: str) -> DataFrame:
     """Score (query, neighbor) candidate pairs — columns (query_id,
     query_vec, neighbor_id, _v) — with one batched numpy cosine per Arrow
-    batch, keeping only each query's LOCAL top-k candidates plus the
+    slice, keeping only each query's LOCAL top-k candidates plus the
     rounding slack.
 
     This bounds the pre-window shuffle at ~batches * Q * k rows instead of
     every scored candidate (for IVF that is nprobe/n_centroids of the
     corpus PER QUERY — the N * Q-shaped volume cosine_topk's local cut
-    already eliminates).  Raw cosine arithmetic is byte-identical to the
-    previous _cosine_np_udf path (same einsum, same division), so rounded
-    values — and therefore the oracle hash — are unchanged.
+    already eliminates).  The raw cosine is one einsum and one division
+    (:func:`_pair_cosine`), so rounded values — and therefore the oracle
+    hash — match a plain per-pair cosine.  A query's k-th best is read off
+    one sort by (query, raw desc); NaN scores (zero vectors) sort last,
+    count toward no query's k and never pass the cut.
     """
 
-    def score(batches):
-        worker_once()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qa = np.stack(pdf["query_vec"].to_numpy()).astype(np.float64)
-            va = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", qa, va)
-            den = np.linalg.norm(qa, axis=1) * np.linalg.norm(va, axis=1)
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "_raw": num / den,
-                }
-            )
-            grp = out.groupby("query_id", sort=False)["_raw"]
-            kth = grp.transform(lambda s: s.nlargest(min(k, len(s))).min())
-            yield out[out["_raw"].to_numpy() >= (kth.to_numpy() - slack)]
+    def score(b):
+        raw = _pair_cosine(b)
+        qid = b.column("query_id").to_numpy(zero_copy_only=False)
+        nid = b.column("neighbor_id").to_numpy(zero_copy_only=False)
+        _, code = np.unique(qid, return_inverse=True)
+        order = np.lexsort((-raw, code))
+        srt, grp = raw[order], code[order]
+        starts = np.flatnonzero(np.r_[True, grp[1:] != grp[:-1]])
+        finite = np.add.reduceat(~np.isnan(srt), starts)
+        pos = starts + np.maximum(np.minimum(k, finite) - 1, 0)
+        kth = np.where(finite > 0, srt[pos], np.nan)[code]
+        keep = raw >= (kth - slack)
+        yield {"query_id": qid[keep], "neighbor_id": nid[keep],
+               "_raw": raw[keep]}
 
-    return cands.select(
-        "query_id", "query_vec", "neighbor_id", "_v"
-    ).mapInPandas(
-        score, "query_id %s, neighbor_id %s, _raw double" % (qid_t, nid_t)
+    return batch_map(
+        cands.select("query_id", "query_vec", "neighbor_id", "_v"), score,
+        "query_id %s, neighbor_id %s, _raw double" % (qid_t, nid_t),
     )
 
 
@@ -568,7 +550,8 @@ def _pair_threshold_cut(cands: DataFrame, min_raw: float,
                         qid_t: str, nid_t: str) -> DataFrame:
     """Score (query, neighbor) candidate pairs — columns (query_id,
     query_vec, neighbor_id, _v) — with one batched numpy cosine per Arrow
-    batch, emitting only pairs whose RAW cosine is >= ``min_raw``.
+    slice, emitting only pairs whose RAW cosine is >= ``min_raw`` (NaN
+    never is).
 
     The volume cut for threshold semantics (near-dup detection): the
     surviving set is the near-dup pairs themselves, so the post-score
@@ -576,29 +559,17 @@ def _pair_threshold_cut(cands: DataFrame, min_raw: float,
     Same einsum/division arithmetic as _pair_scored_cut.
     """
 
-    def score(batches):
-        worker_once()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qa = np.stack(pdf["query_vec"].to_numpy()).astype(np.float64)
-            va = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", qa, va)
-            den = np.linalg.norm(qa, axis=1) * np.linalg.norm(va, axis=1)
-            raw = num / den
-            keep = raw >= min_raw
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy()[keep],
-                    "neighbor_id": pdf["neighbor_id"].to_numpy()[keep],
-                    "_raw": raw[keep],
-                }
-            )
+    def score(b):
+        raw = _pair_cosine(b)
+        keep = raw >= min_raw
+        qid = b.column("query_id").to_numpy(zero_copy_only=False)
+        nid = b.column("neighbor_id").to_numpy(zero_copy_only=False)
+        yield {"query_id": qid[keep], "neighbor_id": nid[keep],
+               "_raw": raw[keep]}
 
-    return cands.select(
-        "query_id", "query_vec", "neighbor_id", "_v"
-    ).mapInPandas(
-        score, "query_id %s, neighbor_id %s, _raw double" % (qid_t, nid_t)
+    return batch_map(
+        cands.select("query_id", "query_vec", "neighbor_id", "_v"), score,
+        "query_id %s, neighbor_id %s, _raw double" % (qid_t, nid_t),
     )
 
 
@@ -630,22 +601,18 @@ def _pq_scored(codes: DataFrame, qids, lut, k: int, slack: float,
     """
     m = lut.shape[1]
 
-    def score(batches, qids=qids, lut=lut):
-        worker_once()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            C = np.stack(pdf["codes"].to_numpy())          # [n, m]
-            # gather: g[q, n, j] = lut[q, j, C[n, j]] (advanced indices
-            # [1, m] and [n, m] broadcast to [n, m]); sum over subspaces
-            g = lut[:, np.arange(m)[None, :], C]           # [Q, n, m]
-            S = g.sum(axis=2).T                            # [n, Q]
-            yield _local_topk_frame(ids, S, qids, k, slack,
-                                    score_name="score")
+    def score(b, qids=qids, lut=lut):
+        ids = b.column("neighbor_id").to_numpy(zero_copy_only=False)
+        C = b.column("codes").flatten().to_numpy().reshape(len(ids), m)
+        # gather: g[q, n, j] = lut[q, j, C[n, j]] (advanced indices
+        # [1, m] and [n, m] broadcast to [n, m]); sum over subspaces
+        g = lut[:, np.arange(m)[None, :], C]               # [Q, n, m]
+        S = g.sum(axis=2).T                                # [n, Q]
+        yield _local_topk_frame(ids, S, qids, k, slack, score_name="score")
 
-    return codes.mapInPandas(
-        score, "query_id %s, neighbor_id %s, score double" % (qid_t, nid_t)
+    return batch_map(
+        codes, score,
+        "query_id %s, neighbor_id %s, score double" % (qid_t, nid_t),
     )
 
 
@@ -724,15 +691,13 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.80,
     here keeps the whole path SQL-oracle-expressible.
 
     The assigned frame is pinned (localCheckpoint) because BOTH sides of
-    the self-join read it — unpinned, Spark re-runs the assignment UDF
+    the self-join read it — unpinned, Spark re-runs the assignment map
     per side.
     """
     cents = _quantizer(embeddings, quantizer, n_clusters, id_col, vec_col)
-    assigned = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        F.element_at(_assign_udf(cents, 1)(F.col(vec_col)), 1)
-        .alias("list_id"),
-    ).localCheckpoint(eager=False)
+    assigned = _assign(embeddings.select(id_col, vec_col), vec_col, cents,
+                       "list_id", [id_col, vec_col]
+                       ).localCheckpoint(eager=False)
     a = assigned.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("query_vec"),
@@ -828,19 +793,14 @@ def sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         )
         Qq, qsc = _sq8_quantize(Qm)
 
-        def score_partition(batches, qids=qids, Qq=Qq, qsc=qsc):
-            worker_once()
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Cq, csc = _sq8_quantize(V)
-                dots = (Cq @ Qq.T).astype(np.float64)   # exact int dot
-                S = (csc[:, None] * qsc[None, :]) * dots
-                yield _local_topk_frame(ids, S, qids, k, slack=2e-6)
+        def score_partition(b, qids=qids, Qq=Qq, qsc=qsc):
+            ids = b.column(id_col).to_numpy(zero_copy_only=False)
+            Cq, csc = _sq8_quantize(vectors(b.column(vec_col)))
+            dots = (Cq @ Qq.T).astype(np.float64)       # exact int dot
+            S = (csc[:, None] * qsc[None, :]) * dots
+            yield _local_topk_frame(ids, S, qids, k, slack=2e-6)
 
-        part = corpus.mapInPandas(score_partition, scored_ddl)
+        part = batch_map(corpus, score_partition, scored_ddl)
         scored = part if scored is None else scored.unionByName(part)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_e6").desc(), F.col("neighbor_id").asc()
@@ -885,14 +845,14 @@ def cluster_sample(embeddings: DataFrame, n_centroids: int = 16,
     cluster; raise ``bucket_nibbles`` at corpus scale."""
     cents = _quantizer(embeddings, quantizer, n_centroids, id_col, vec_col)
     key = F.md5(
-        F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))
+        F.concat_ws(":", F.lit(salt), F.col("vec_id").cast("string"))
     )
-    asg = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.element_at(_assign_udf(cents, 1)(F.col(vec_col)), 1)
-        .cast("int").alias("cluster_id"),
-        key.alias("_k"),
-    ).withColumn("_bkt", F.substring("_k", 1, bucket_nibbles))
+    asg = _assign(
+        embeddings.select(F.col(id_col).alias("vec_id"),
+                          F.col(vec_col).alias("_v")),
+        "_v", cents, "cluster_id", ["vec_id"],
+    ).withColumn("_k", key).withColumn(
+        "_bkt", F.substring("_k", 1, bucket_nibbles))
     bcounts = asg.groupBy("cluster_id", "_bkt").agg(
         F.count("*").alias("_bn")
     )

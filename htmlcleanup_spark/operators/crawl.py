@@ -3,9 +3,8 @@
 At 100 TB you never reprocess a whole crawl: successive snapshots overlap
 ~90%+, so the unit of work is the DELTA — pages that appeared, vanished,
 or changed content between snapshot N-1 and N.  ``crawl_diff`` computes
-that delta as ONE full-outer join on the page key; ``changed_pages``
-restricts it to the rows an incremental extract actually has to touch
-(added + changed), which then feeds plans/extract unchanged.
+that delta as ONE full-outer join on the page key; its added + changed
+rows are what an incremental extract has to touch.
 
 Scale notes: the join shuffles both snapshots on the key unless they are
 bucketed — write snapshots with the bucketed layout from sources/pages
@@ -54,18 +53,6 @@ def crawl_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
         "old_digest",
         "new_digest",
     )
-
-
-def changed_pages(new: DataFrame, diff: DataFrame,
-                  key_col: str = "url") -> DataFrame:
-    """The rows of snapshot N an incremental extract must process: pages
-    whose status is added or changed.  A semi-join on the key — the page
-    bodies stay on their side; at scale broadcast the (usually small)
-    delta keys."""
-    delta = diff.filter(F.col("status").isin("added", "changed")).select(
-        key_col
-    )
-    return new.join(delta, key_col, "left_semi")
 
 
 def crawl_frontier(outlinks: DataFrame, crawled: DataFrame,

@@ -31,18 +31,17 @@ Scale shape (10^12 raw docs, 10^7 target docs):
 - the (bucket, lr_e6) table has <= B rows — broadcast;
 - per-doc scoring is one explode + broadcast join + one doc-keyed sum
   with partial combine: a single full shuffle of one row per doc;
-- selection by threshold is a pushed-down filter (no global order); the
-  exact top-frac variant uses one window over a total order and is for
-  validation scale, like operators/sample.token_budget_sample.
+- selection by a logw_e6 threshold is a pushed-down filter (no global
+  order); an exact top-frac needs one window over a total order and is
+  for validation scale (``q_dsir_weights`` flags the top 25% that way),
+  like operators/sample.token_budget_sample.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-__all__ = ["hashed_gram_counts", "dsir_logratio", "dsir_weights",
-           "dsir_select"]
+__all__ = ["hashed_gram_counts", "dsir_logratio", "dsir_weights"]
 
 
 def _gram_stream(df: DataFrame, text_col: str,
@@ -192,24 +191,4 @@ def dsir_weights(raw_df: DataFrame, target_df: DataFrame,
         .join(lr, "bucket")
         .groupBy(id_col)
         .agg(F.sum(F.col("cnt") * F.col("lr_e6")).alias("logw_e6"))
-    )
-
-
-def dsir_select(weights: DataFrame, top_frac: float | None = None,
-                threshold: int | None = None,
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep the most target-like raw documents.  ``threshold`` (a
-    logw_e6 cut, e.g. from approxQuantile on a sample) is the corpus-
-    scale path: a pushed-down filter with no global order.  ``top_frac``
-    is the exact validation-scale variant: one window over the
-    (logw_e6 DESC, id) total order."""
-    if threshold is not None:
-        return weights.filter(F.col("logw_e6") >= threshold)
-    n = weights.count()
-    keep = int(n * (top_frac if top_frac is not None else 0.25))
-    w = Window.orderBy(F.col("logw_e6").desc(), F.col(id_col).asc())
-    return (
-        weights.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= keep)
-        .drop("_rk")
     )

@@ -226,14 +226,19 @@ def _read_done(spark: SparkSession, output_path: str,
     marker).  With ``retry_errors`` the urls whose last run errored are
     excluded, so they are re-attempted.
     """
-    snap = _current_snapshot(spark, output_path)
+    src = _current_snapshot(spark, output_path)
+    if src is None:
+        src = output_path + "/data"
+        if not _hadoop_ls(spark, src):
+            # A fresh start: reading the missing path would make Spark log
+            # a PATH_NOT_FOUND error for a normal first run.
+            return None
     try:
-        src = snap if snap is not None else output_path + "/data"
         done = spark.read.parquet(src).select("url", "error")
     except AnalysisException:
-        # No committed output yet: no path, or a data/ holding only an
-        # uncommitted _temporary.  Any other failure (a corrupt file) must
-        # stop the run, or resume would re-clean and re-append every url.
+        # No committed output yet: a data/ holding only an uncommitted
+        # _temporary.  Any other failure (a corrupt file) must stop the
+        # run, or resume would re-clean and re-append every url.
         return None
     if retry_errors:
         done = done.filter(F.col("error").isNull())
@@ -306,8 +311,9 @@ def merge_parquet(spark: SparkSession, result: DataFrame,
     Reads the current snapshot, applies :func:`upsert_by_url`, and writes
     the merged table as the NEXT snapshot directory (never overwriting
     what it reads).  The parquet job commit (_SUCCESS) is the atomic
-    commit point; old snapshots remain for time-travel/debug until an
-    expire pass removes them (Iceberg's expire_snapshots equivalent).
+    commit point; after it, :func:`expire_snapshots` keeps the newest two
+    committed snapshots (the one just written and the one it replaced),
+    so the layout holds at most two table copies.
     Reference sink shape: cleanup_msfp.py:300-302 (write the cleaned doc
     back in one step).
 
@@ -326,6 +332,7 @@ def merge_parquet(spark: SparkSession, result: DataFrame,
     merged.write.mode("overwrite").parquet(
         output_path + "/snap-%06d" % nxt
     )
+    expire_snapshots(spark, output_path)
 
 
 def expire_snapshots(spark: SparkSession, output_path: str,
@@ -333,8 +340,8 @@ def expire_snapshots(spark: SparkSession, output_path: str,
     """Iceberg ``expire_snapshots`` equivalent for the merge-sink layout:
     delete all but the newest ``keep_last`` COMMITTED snapshot dirs.
 
-    Every :func:`merge_parquet` run leaves a full table copy behind; this
-    is the bounded-retention pass that reclaims them.  Safety rules:
+    Every :func:`merge_parquet` run writes a full table copy; this is the
+    bounded-retention pass it runs after each commit.  Safety rules:
 
     - the current snapshot (newest committed) is NEVER deleted, so
       ``keep_last`` is clamped to >= 1;

@@ -20,15 +20,12 @@ key generation is a codegen-resident expression chain (split + reverse
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udf import worker_once
-
-__all__ = ["CDX_JSON_DDL", "surt_key", "parse_cdxj", "read_cdx",
-           "latest_captures", "to_cdxj_lines", "fetch_plan",
-           "merge_capture_indexes", "fetch_warc_ranges",
-           "capture_history", "cluster_index"]
+__all__ = ["CDX_JSON_DDL", "surt_key", "parse_cdxj", "latest_captures",
+           "fetch_plan", "merge_capture_indexes", "capture_history",
+           "cluster_index"]
 
 # capture-info JSON fields, as Common Crawl's cc-index ships them
 # (numbers arrive as JSON strings there; parse to typed columns here)
@@ -82,24 +79,6 @@ def surt_key(url: Column | str) -> Column:
     return F.concat(rev_host, port, F.lit(")"), path)
 
 
-def to_cdxj_lines(df: DataFrame, urlkey_col: str = "urlkey",
-                  ts_col: str = "cdx_ts") -> DataFrame:
-    """Render capture rows back into CDXJ index lines (the write side):
-    ``<urlkey> <ts> {"url": ..., "digest": ..., ...}`` via ``to_json``
-    over the info struct — one JVM expression, partition-parallel text
-    out, how an index shard is (re)published after a recrawl merge."""
-    info = F.to_json(
-        F.struct("url", "mime", "status", "digest",
-                 F.col("length").cast("string").alias("length"),
-                 F.col("offset").cast("string").alias("offset"),
-                 "filename")
-    )
-    return df.select(
-        F.concat_ws(" ", F.col(urlkey_col), F.col(ts_col), info)
-        .alias("value")
-    )
-
-
 def parse_cdxj(lines: DataFrame, col: str = "value") -> DataFrame:
     """CDXJ text lines -> typed capture rows.
 
@@ -126,15 +105,6 @@ def parse_cdxj(lines: DataFrame, col: str = "value") -> DataFrame:
         info["length"].cast("bigint").alias("length"),
         info["offset"].cast("bigint").alias("offset"),
         info["filename"].alias("filename"),
-    )
-
-
-def read_cdx(spark: SparkSession, path: str,
-             path_glob: str = "*.cdx*") -> DataFrame:
-    """Read a directory of CDXJ index shards (.cdx / .cdx.gz — Spark's
-    text source decompresses by extension) as typed capture rows."""
-    return parse_cdxj(
-        spark.read.option("pathGlobFilter", path_glob).text(path)
     )
 
 
@@ -308,92 +278,33 @@ def capture_history(captures: DataFrame, key_col: str = "urlkey",
     )
 
 
-def fetch_warc_ranges(plan: DataFrame, warc_dir: str,
-                      record_types: tuple = ("response",)) -> DataFrame:
-    """EXECUTE a fetch_plan: one ranged read per (filename, batch) row —
-    seek to read_start, read the covering span, parse the records out
-    (sources/warc grammar; .warc.gz spans decompress because CDX
-    offsets address gzip MEMBER starts, the Common Crawl convention of
-    one member per record, so a batch span covers whole members).
-
-    This closes the CDX story end-to-end: query the index
-    (latest_captures) -> batch the byte ranges (fetch_plan) -> fetch +
-    parse (here) -> the pages table.  Parallelism is plan rows — each
-    batch is one bounded task (~max_batch_bytes), so a 1000-executor
-    cluster issues 1000 concurrent ranged reads with per-task memory
-    ~= batch span, independent of file or corpus size.  ``warc_dir``
-    is a filesystem prefix here (local/NFS/fuse); the task body is the
-    single seam where a real deployment swaps in ranged GETs.
-    """
-    import os
-
-    import pandas as pd
-
-    from .warc import _iter_decompressed, iter_warc_records
-
-    def fetch(batches):
-        worker_once()
-        for pdf in batches:
-            for fn, start, end in zip(
-                pdf["filename"], pdf["read_start"], pdf["read_end"]
-            ):
-                with open(os.path.join(warc_dir, str(fn)), "rb") as f:
-                    f.seek(int(start))
-                    span = f.read(int(end) - int(start))
-                rows = [
-                    (r["url"], r["warc_ts"], r["html"])
-                    for r in iter_warc_records(
-                        _iter_decompressed(span), record_types
-                    )
-                ]
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["url", "_ts", "html"]
-                    )
-
-    raw = plan.select("filename", "read_start", "read_end").mapInPandas(
-        fetch, "url string, _ts string, html binary"
-    )
-    return raw.select(
-        "url", F.to_timestamp("_ts").alias("warc_ts"), "html"
-    )
-
-
 def _enumerate_sorted(captures: DataFrame,
                       num_ranges: int | None = None) -> DataFrame:
     """Stages 1-2 of the distributed enumerate (see cluster_index):
-    range-sort on (urlkey, ts), then one Arrow pass per partition
-    carrying a local line counter across batches.  Split out so plan
-    tests can gate the pre-checkpoint physical plan (the checkpoint
-    cuts lineage)."""
-    import pandas as pd
-
+    range-sort on (urlkey, ts), then a partition-local line number.
+    ``monotonically_increasing_id`` puts the partition id in the upper
+    31 bits and the row's index within the partition in the lower 33, so
+    after the sort the local line number is the id minus
+    ``partition << 33``, plus one — a JVM expression, no Python.  It is
+    nondeterministic across re-executions (range bounds are sampled), so
+    cluster_index pins it with an eager checkpoint.  Split out so plan
+    tests can gate the pre-checkpoint physical plan (the checkpoint cuts
+    lineage)."""
     n_parts = num_ranges or captures.sparkSession.conf.get(
         "spark.sql.shuffle.partitions"
     )
-    sorted_caps = (
-        captures.select("urlkey", "ts")
+    pid = F.spark_partition_id()
+    return (
+        captures.select("urlkey", F.col("ts").cast("long").alias("ts"))
         .repartitionByRange(int(n_parts), "urlkey", "ts")
         .sortWithinPartitions("urlkey", "ts")
+        .select(
+            "urlkey", "ts",
+            (F.monotonically_increasing_id()
+             - F.shiftleft(pid.cast("long"), 33) + 1).alias("_local_rn"),
+            pid.alias("_pid"),
+        )
     )
-
-    def enumerate_partition(batches):
-        worker_once()
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "urlkey": pdf["urlkey"],
-                    "ts": pdf["ts"],
-                    "_local_rn": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    return sorted_caps.mapInPandas(
-        enumerate_partition, "urlkey string, ts long, _local_rn long"
-    ).withColumn("_pid", F.spark_partition_id())
 
 
 def cluster_index(captures: DataFrame, every: int = 3000,
@@ -414,9 +325,9 @@ def cluster_index(captures: DataFrame, every: int = 3000,
     1. range-repartition + sort within partitions on (urlkey, ts) —
        Spark's distributed sort (sampled range bounds, skew spread
        across ``num_ranges`` tasks);
-    2. ONE Arrow pass per partition emits a partition-local line
-       number (a counter carried across the partition's batches —
-       mapInPandas is invoked once per partition), zero shuffle;
+    2. each row's partition-local line number is read off
+       ``monotonically_increasing_id`` (its low 33 bits count rows
+       within the partition), zero shuffle, no Python;
     3. per-partition row counts (a ~|partitions|-row aggregate on the
        pinned frame) prefix-sum on the driver into exclusive offsets —
        bounded by task count, never data size — and broadcast-join

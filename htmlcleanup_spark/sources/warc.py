@@ -6,8 +6,9 @@ directory of ``.warc`` files into the north-rule pages shape
 (url, warc_ts, html, text=NULL, lang=NULL).
 
 Scale design: ``spark.read.format("binaryFile")`` gives one row per file
-(content as bytes); parsing fans out per file via mapInPandas, so a
-thousand-executor cluster ingests a thousand WARCs concurrently —
+(content as bytes); parsing fans out per file through the package's
+Arrow shell (``functions/udf.batch_map``), so a thousand-executor
+cluster ingests a thousand WARCs concurrently —
 parallelism is file-count, which is how Common Crawl ships (1 GB segment
 files).  The parser is a self-contained implementation of the public
 WARC/1.0 record grammar (version line, CRLF-separated headers, blank line,
@@ -16,7 +17,7 @@ emitted, with the HTTP envelope stripped.
 
 Task-memory bound: a 1 GB .warc.gz segment decompresses to ~4-5 GB; with
 several concurrent tasks per executor, materializing that (plus all its
-records in one pandas frame) is the first OOM at real scale.  So the
+records in one output batch) is the first OOM at real scale.  So the
 decompressor walks the stream's gzip members INCREMENTALLY (zlib
 decompressobj; .warc.gz is a concatenation of per-record members), the
 record scanner consumes a rolling buffer that is trimmed as records
@@ -35,8 +36,9 @@ import zlib
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions.udf import worker_once
+from ..functions.udf import batch_map
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -174,16 +176,13 @@ def _iter_decompressed(content: bytes,
 
 
 def iter_warc_batches(content: bytes,
-                      max_batch_bytes: int = 64 << 20,
-                      record_types: Iterable[str] = ("response",)
-                      ) -> Iterator[list]:
-    """Record batches [(url, ts, html), ...] from one WARC file's bytes,
-    each batch holding at most ``max_batch_bytes`` of html (at least one
-    record per batch, so a single oversized record still flows)."""
+                      max_batch_bytes: int = 64 << 20) -> Iterator[list]:
+    """Response-record batches [(url, ts, html), ...] from one WARC file's
+    bytes, each batch holding at most ``max_batch_bytes`` of html (at least
+    one record per batch, so a single oversized record still flows)."""
     batch: list = []
     acc = 0
-    for rec in iter_warc_records(_iter_decompressed(content),
-                                 record_types):
+    for rec in iter_warc_records(_iter_decompressed(content)):
         if batch and acc + len(rec["html"]) > max_batch_bytes:
             yield batch
             batch, acc = [], 0
@@ -195,11 +194,8 @@ def iter_warc_batches(content: bytes,
 
 def read_warc(spark: SparkSession, path: str,
               path_glob: str = "*.warc*",
-              max_batch_bytes: int = 64 << 20,
-              record_types: tuple = ("response",)) -> DataFrame:
+              max_batch_bytes: int = 64 << 20) -> DataFrame:
     """Read a directory of .warc / .warc.gz files as the pages table."""
-    import pandas as pd
-
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", path_glob)
@@ -207,30 +203,20 @@ def read_warc(spark: SparkSession, path: str,
         .select("content")
     )
 
-    def parse(batches):
-        worker_once()
-        for pdf in batches:
-            for content in pdf["content"]:
-                for batch in iter_warc_batches(bytes(content),
-                                               max_batch_bytes,
-                                               record_types):
-                    yield pd.DataFrame(
-                        [(u, t, h, None, None) for u, t, h in batch],
-                        columns=["url", "_ts", "html", "text", "lang"],
-                    )
+    def parse(b):
+        for content in b.column("content"):
+            for batch in iter_warc_batches(content.as_py(), max_batch_bytes):
+                url, ts, html = zip(*batch)
+                yield {"url": url, "_ts": ts, "html": html}
 
-    raw = files.mapInPandas(
-        parse, "url string, _ts string, html binary, text string, lang string"
-    )
-    from pyspark.sql import functions as F
-
+    raw = batch_map(files, parse, "url string, _ts string, html binary")
     # WARC-Date is ISO-8601 Zulu (e.g. 2024-01-01T00:00:00Z)
     return raw.select(
         "url",
         F.to_timestamp("_ts").alias("warc_ts"),
         "html",
-        "text",
-        "lang",
+        F.lit(None).cast("string").alias("text"),
+        F.lit(None).cast("string").alias("lang"),
     )
 
 
@@ -294,8 +280,6 @@ def revisit_dedup(captures, key_col="urlkey", ts_col="ts",
     is one agg group with a 1-row result, and its join fan-out is
     output-sized.  Column-only compare — page bytes never move.
     """
-    from pyspark.sql import functions as F
-
     originals = (
         captures.groupBy(F.col(digest_col).alias("_d"))
         .agg(
@@ -365,7 +349,7 @@ def iter_warc_captures(content: bytes, filename: str = "",
                        chunk_bytes: int = 1 << 20) -> Iterator[tuple]:
     """CDX capture tuples (url, ts14, mime, status, digest, length,
     offset, filename) with REAL warc coordinates — the generation side
-    of the CDX loop (read_cdx/fetch planning is the consumption side).
+    of the CDX loop (parse_cdxj/fetch_plan are the consumption side).
 
     Coordinate semantics follow how each layout is fetched:
     - ``.warc.gz`` (member-per-record, as Common Crawl ships): offset/
@@ -436,15 +420,13 @@ def warc_to_cdx(spark: SparkSession, path: str,
                 path_glob: str = "*.warc*") -> DataFrame:
     """Generate CDX capture rows from a directory of WARC segments —
     the index-build job that runs after a crawl lands (its output feeds
-    to_cdxj_lines -> index_merge -> cluster_idx, closing the
-    WARC -> CDX -> ranged-fetch loop end to end).
+    index_merge -> cluster_idx and fetch_plan, closing the WARC -> CDX ->
+    fetch-plan loop end to end).
 
     Scale shape: binaryFile gives one task per segment, the capture
     walk streams each file once (O(member) memory), urlkey is the
     shared :func:`surt_key` JVM expression — ZERO shuffles; the
     downstream index sort/merge owns the ordering cost."""
-    import pandas as pd
-
     from .cdx import surt_key
 
     files = (
@@ -453,20 +435,18 @@ def warc_to_cdx(spark: SparkSession, path: str,
         .load(path)
         .select("path", "content")
     )
+    cols = ["url", "cdx_ts", "mime", "status", "digest",
+            "length", "offset", "filename"]
 
-    def gen(batches):
-        worker_once()
-        cols = ["url", "cdx_ts", "mime", "status", "digest",
-                "length", "offset", "filename"]
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                fname = str(p).rsplit("/", 1)[-1]
-                rows = list(iter_warc_captures(bytes(content), fname))
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
+    def gen(b):
+        for p, content in zip(b.column("path"), b.column("content")):
+            fname = p.as_py().rsplit("/", 1)[-1]
+            rows = list(iter_warc_captures(content.as_py(), fname))
+            if rows:
+                yield dict(zip(cols, zip(*rows)))
 
-    raw = files.mapInPandas(
-        gen,
+    raw = batch_map(
+        files, gen,
         "url string, cdx_ts string, mime string, status int, "
         "digest string, length bigint, offset bigint, filename string",
     )

@@ -2,23 +2,22 @@
 
 Common Crawl publishes extracted text as WET files — WARC containers
 whose records are ``WARC-Type: conversion`` with a plain-text block
-(ISO 28500 §6.8).  This sink renders the extraction pipeline's output
-in that interchange shape so downstream consumers (and the repo's own
-WARC reader, ``sources/warc.py``) can ingest it directly.
+(ISO 28500 §6.8).  This module renders the extraction pipeline's output
+in that interchange shape, one record string per row.
 
 Scale shape: record rendering is pure JVM string concat (whole-stage
 codegen, zero Python, zero shuffle — the narrow map rides whatever
-partitioning the extraction left); the writer is Spark's text sink with
-per-partition gzip, so a 1000-executor job writes 1000 compressed WET
-segments concurrently, exactly how Common Crawl ships them.
+partitioning the extraction left); Spark's text sink with per-partition
+gzip then writes one compressed segment per partition, the way Common
+Crawl ships them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["to_wet_records", "write_wet", "read_wet", "to_wat_records"]
+__all__ = ["to_wet_records", "to_wat_records"]
 
 _DATE_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
@@ -116,36 +115,4 @@ def to_wat_records(df: DataFrame, url_col: str = "url",
         F.col(url_col).alias("url"),
         rec.alias("record"),
         F.octet_length(rec).cast("long").alias("record_bytes"),
-    )
-
-
-def write_wet(df: DataFrame, path: str, compress: bool = True) -> None:
-    """Write WET segments: one text file (gzip member) per partition.
-
-    The record column already ends with one CRLF of the WARC
-    record separator; the text sink's ``lineSep`` is set to CRLF so the
-    writer itself supplies the second — byte-exact WET framing with no
-    Python in the write path.  Repartition upstream to size segments
-    (Common Crawl targets ~150 MB compressed per WET file)."""
-    recs = to_wet_records(df).select(
-        # drop ONE trailing CRLF; the writer's lineSep restores it
-        F.expr("substring(record, 1, length(record) - 2)").alias("value")
-    )
-    w = recs.write.mode("overwrite").option("lineSep", "\r\n")
-    if compress:
-        w = w.option("compression", "gzip")
-    w.text(path)
-
-
-def read_wet(spark: SparkSession, path: str,
-             path_glob: str = "part-*") -> DataFrame:
-    """Read WET segments back as (url, warc_ts, text) — the round-trip
-    twin of :func:`write_wet`, reusing the incremental WARC scanner with
-    ``conversion`` records enabled."""
-    from .warc import read_warc
-
-    pages = read_warc(spark, path, path_glob=path_glob,
-                      record_types=("conversion",))
-    return pages.select(
-        "url", "warc_ts", F.decode("html", "utf-8").alias("text")
     )

@@ -366,24 +366,11 @@ def test_ivf_scored_volume_bounded(spark):
     set it scores (previously every probed candidate hit the window
     exchange)."""    
     from htmlcleanup_spark.operators import ann
-    from pyspark.sql import functions as F
 
     emb, qs = _emb_queries(spark)
     k, n_centroids, nprobe = 10, 16, 4
     cents = ann.ivf_centroids(emb, n_centroids)
-    corp = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("_v"),
-        F.element_at(ann._assign_udf(cents, 1)(F.col("embedding")), 1)
-        .alias("list_id"),
-    )
-    q = qs.withColumn(
-        "list_id",
-        F.explode(ann._assign_udf(cents, nprobe)(F.col("query_vec"))),
-    )
-    cands = q.join(corp, "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
+    cands = ann._ivf_candidates(emb, qs, cents, nprobe)
     n_cands = cands.count()
     scored = ann._pair_scored_cut(cands, k, 1.5e-4, "bigint", "bigint")
     n = scored.count()

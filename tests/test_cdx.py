@@ -1,10 +1,7 @@
-"""CDX(J) crawl-index source: SURT keys, parse/render round trip,
-latest-capture collapse, and shard reads."""
+"""CDX(J) crawl-index source: SURT keys, CDXJ parsing, latest-capture
+collapse, fetch planning, index merge and the cluster index."""
 
 from __future__ import annotations
-
-import gzip
-import os
 
 from pyspark.sql import functions as F
 
@@ -84,22 +81,6 @@ def test_parse_cdxj_malformed_json_survives_as_nulls(spark):
     assert bad.url is None and bad.status is None and bad.offset is None
 
 
-def test_render_parse_round_trip(spark):
-    from htmlcleanup_spark.sources.cdx import parse_cdxj, to_cdxj_lines
-
-    caps = spark.createDataFrame(
-        [("com,example)/p", "20240102030405", "https://example.com/p",
-          "text/html", "200", "sha1:AAAA", 1234, 98765, "seg-0.warc.gz")],
-        "urlkey string, cdx_ts string, url string, mime string, "
-        "status string, digest string, length long, offset long, "
-        "filename string",
-    )
-    back = parse_cdxj(to_cdxj_lines(caps)).collect()[0]
-    assert back.urlkey == "com,example)/p"
-    assert back.status == 200
-    assert back.offset == 98765 and back.length == 1234
-
-
 def _captures(spark):
     # one urlkey, three captures (one 404); a second key with one capture
     rows = [
@@ -130,23 +111,6 @@ def test_latest_captures_collapse(spark):
                 for r in latest_captures(_captures(spark),
                                          ok_only=False).collect()}
     assert with_404["k1"].n_captures == 3
-
-
-def test_read_cdx_shards_including_gz(spark, tmp_path):
-    from htmlcleanup_spark.sources.cdx import read_cdx
-
-    d = str(tmp_path)
-    with open(os.path.join(d, "part-0.cdx"), "w") as f:
-        f.write(_LINE + "\n")
-    with gzip.open(os.path.join(d, "part-1.cdx.gz"), "wt") as f:
-        f.write(_LINE.replace(")/p", ")/q") + "\n")
-    with open(os.path.join(d, "ignore.txt"), "w") as f:
-        f.write("not an index line\n")
-
-    out = read_cdx(spark, d)
-    assert sorted(r.urlkey for r in out.collect()) == [
-        "com,example)/p", "com,example)/q",
-    ]
 
 
 def test_fetch_plan_greedy_fill_and_gap_bytes(spark):
@@ -206,56 +170,6 @@ def test_merge_capture_indexes_newer_wins_counts_add(spark):
     assert k1.n_digests_ub == 3          # 2 old + 1 new (upper bound)
     assert out["k2"].n_captures == 1     # old-only key survives
     assert out["k3"].n_captures == 1     # new-only key appears
-
-
-def test_fetch_warc_ranges_executes_plan(spark, tmp_path):
-    """CDX story end-to-end: capture coordinates -> fetch_plan batches
-    -> ranged reads + parse == the records the coordinates address,
-    for a plain .warc (byte offsets) AND a .warc.gz (gzip-member
-    offsets/lengths, the Common Crawl convention)."""
-    from htmlcleanup_spark.sources.cdx import fetch_plan, fetch_warc_ranges
-    from htmlcleanup_spark.sources.pages import make_html
-
-    def record(i):
-        html = make_html(i, 7)
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                + html)
-        hdr = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-               + b"WARC-Target-URI: https://x.ex/p/%d\r\n" % i
-               + b"WARC-Date: 2024-01-01T00:00:%02dZ\r\n" % (i % 60)
-               + b"Content-Length: %d\r\n" % len(http))
-        return html, hdr + b"\r\n" + http + b"\r\n\r\n"
-
-    caps = []
-    # plain file: byte offsets into the uncompressed stream
-    off, blob = 0, b""
-    for i in range(6):
-        _, raw = record(i)
-        caps.append(("a.warc", off, len(raw), i))
-        blob += raw
-        off += len(raw)
-    (tmp_path / "a.warc").write_bytes(blob)
-    # gz file: one gzip member per record, member offsets/lengths
-    off, blob = 0, b""
-    for i in range(6, 12):
-        _, raw = record(i)
-        member = gzip.compress(raw)
-        caps.append(("b.warc.gz", off, len(member), i))
-        blob += member
-        off += len(member)
-    (tmp_path / "b.warc.gz").write_bytes(blob)
-
-    cap_df = spark.createDataFrame(
-        [(f, o, n) for f, o, n, _ in caps],
-        "filename string, offset long, length long")
-    plan = fetch_plan(cap_df, max_batch_bytes=2000)   # several batches
-    assert plan.count() > 2
-    pages = fetch_warc_ranges(plan, str(tmp_path)).collect()
-    assert sorted(r.url for r in pages) == sorted(
-        "https://x.ex/p/%d" % i for i in range(12))
-    got = {r.url: bytes(r.html) for r in pages}
-    for i in range(12):
-        assert got["https://x.ex/p/%d" % i] == make_html(i, 7)
 
 
 def _executed_plan(df):

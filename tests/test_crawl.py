@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from htmlcleanup_spark.operators.crawl import changed_pages, crawl_diff
+from htmlcleanup_spark.operators.crawl import crawl_diff
 
 
 def _snap(spark, rows):
@@ -29,14 +29,6 @@ def test_crawl_diff_digest_column_passthrough(spark):
     got = crawl_diff(old, new, digest_col="dg").collect()
     assert got[0]["status"] == "changed"
     assert (got[0]["old_digest"], got[0]["new_digest"]) == ("h1", "h2")
-
-
-def test_changed_pages_selects_added_and_changed(spark):
-    old = _snap(spark, [("a", "1"), ("c", "3")])
-    new = _snap(spark, [("a", "1"), ("c", "X"), ("d", "4")])
-    diff = crawl_diff(old, new)
-    got = {r["url"] for r in changed_pages(new, diff).collect()}
-    assert got == {"c", "d"}
 
 
 def test_diff_shuffles_digests_not_bodies(spark):

@@ -1,10 +1,9 @@
 """DSIR importance resampling: target-like raw docs outrank off-domain
-ones; threshold selection is a pure filter; weights are integers."""
-from pyspark.sql import functions as F
+ones; weights are integers."""
 
 
 def test_dsir_ranks_target_like_docs_higher(spark):
-    from htmlcleanup_spark.operators.dsir import dsir_weights, dsir_select
+    from htmlcleanup_spark.operators.dsir import dsir_weights
 
     target = spark.createDataFrame(
         [(100 + i, "spark sql query plan optimizer join shuffle")
@@ -24,15 +23,3 @@ def test_dsir_ranks_target_like_docs_higher(spark):
          for r in dsir_weights(raw, target, n_buckets=1 << 13).collect()}
     assert isinstance(w[0], int)
     assert min(w[0], w[2]) > max(w[1], w[3])
-
-    kept = dsir_select(
-        dsir_weights(raw, target, n_buckets=1 << 13), top_frac=0.5
-    )
-    assert {r.doc_id for r in kept.collect()} == {0, 2}
-
-    # threshold path: plain filter, no window
-    thr = dsir_select(
-        dsir_weights(raw, target, n_buckets=1 << 13),
-        threshold=min(w[0], w[2]),
-    )
-    assert {r.doc_id for r in thr.collect()} == {0, 2}

@@ -5,12 +5,12 @@ the 100-TB design rules:
 
 - **No CartesianProduct** — the only sanctioned cross-join shape is the
   broadcast 1-row scalar attach, which prints as BroadcastNestedLoopJoin.
-- **No BatchEvalPython** — row-at-a-time Python UDFs are banned; every
-  Python crossing is mapInArrow/mapInPandas over batches.
-- **No MapInPandas outside its allowlist** — every per-document Python map
-  goes through the one Arrow shell (``functions/udf.doc_map``, a
-  MapInArrow); only whole-batch scorers and file-to-records readers may
-  convert batches to pandas.
+- **No BatchEvalPython** — row-at-a-time Python UDFs are banned.
+- **One Python boundary** — every Python map goes through the Arrow shell
+  (``functions/udf.doc_map`` / ``batch_map``, a MapInArrow): no plan holds
+  a MapInPandas or a pandas_udf (ArrowEvalPython), and no package file
+  imports pandas or names ``pandas_udf`` / ``mapInPandas`` (no Spark
+  needed for that one).
 - **Global windows (empty PARTITION BY) only where a docstring documents
   a bound or a windowless corpus path** — a global window is a single
   sort task at corpus scale, and AQE cannot split window partitions.
@@ -48,8 +48,8 @@ _GLOBAL_WINDOW = re.compile(
 
 # Documented global-window exceptions: name -> why the plan is safe.
 GLOBAL_WINDOW_ALLOWED = {
-    # operators/dsir.dsir_select top_frac: exact VALIDATION path; corpus
-    # path is the threshold= pushed-down filter (same docstring).
+    # q_dsir_weights' top-25% flag: exact VALIDATION path; the corpus
+    # path is a logw_e6 threshold filter (operators/dsir docstring).
     "dsir_weights": "validation-scale exact top-frac; threshold path at scale",
     # operators/corpus.filter_funnel: running sum over the STAGE table —
     # one row per funnel stage (~7 rows), not per document.
@@ -71,26 +71,6 @@ GLOBAL_WINDOW_ALLOWED = {
 }
 
 
-# Documented MapInPandas users: name -> why the query is not a per-document
-# map (those go through functions/udf.doc_map).
-MAP_IN_PANDAS_ALLOWED = {
-    # operators/ann: numpy scorers over whole corpus batches (a batch of
-    # vectors against the broadcast queries/centroids), not one row at a
-    # time.
-    "ann_cosine_topk": "ann: whole-batch numpy cosine scorer",
-    "ann_sq8_topk": "ann: whole-batch int8 scorer",
-    "ann_lsh_topk": "ann: whole-batch scorer over LSH candidates",
-    "ann_ivf_topk": "ann: whole-batch scorer over probed IVF lists",
-    "ann_pq_topk": "ann: whole-batch PQ-ADC table lookups",
-    "ann_recall": "ann: composes the whole-batch scorers above",
-    "semdedup": "ann: whole-batch within-cluster cosine",
-    # sources/warc and sources/cdx: one task per WARC file, many records
-    # out — a file-to-records reader, not a per-document map.
-    "warc_ingest": "warc: file-to-records reader",
-    "cdx_generate": "warc/cdx: file-to-records reader",
-}
-
-
 # Public package names that only tests reference: name -> why it stays.
 TEST_ONLY_ALLOWED = {
     # Reference outputs derived from the page recipe, not by running the
@@ -104,16 +84,6 @@ TEST_ONLY_ALLOWED = {
     "write_bucketed": "writes the bucketed tables of the join-plan tests",
     # The extract job's output reader (either sink layout).
     "read_extracted": "reads back run_extract's output",
-    # Callable surfaces no job or query runs yet: each is to be wired in
-    # or deleted (ROADMAP item 5).
-    "changed_pages": "crawl_diff consumer; no incremental job uses it",
-    "dsir_select": "dsir_weights consumer; no recipe selects by it",
-    "expire_snapshots": "merge-sink retention; no job schedules it",
-    "fetch_warc_ranges": "fetch_plan executor; no query reads WARC ranges",
-    "read_cdx": "CDXJ shard reader; queries parse in-memory lines",
-    "to_cdxj_lines": "CDXJ writer; only its round-trip test runs it",
-    "read_wet": "WET reader; only the write_wet round trip runs it",
-    "write_wet": "WET writer; no job writes WET segments",
 }
 
 
@@ -208,19 +178,41 @@ def test_no_row_at_a_time_python_udf_anywhere(registry_plans):
 
 
 def test_map_in_pandas_only_where_documented(registry_plans):
+    """No exceptions are documented any more: no registered plan holds a
+    MapInPandas or a pandas_udf (ArrowEvalPython), every Python map is a
+    MapInArrow through functions/udf."""
     offenders = sorted(
         n for n, p in registry_plans.items()
-        if "MapInPandas" in p and n not in MAP_IN_PANDAS_ALLOWED
+        if "MapInPandas" in p or "ArrowEvalPython" in p
     )
     assert offenders == [], (
-        "per-document Python maps go through functions/udf.doc_map: %s"
+        "Python maps go through functions/udf.doc_map or batch_map: %s"
         % offenders
     )
-    stale = sorted(
-        n for n in MAP_IN_PANDAS_ALLOWED
-        if n in registry_plans and "MapInPandas" not in registry_plans[n]
-    )
-    assert stale == [], "allowlist entries without MapInPandas: %s" % stale
+
+
+def test_package_has_no_pandas_boundary():
+    offenders = []
+    for path in _source_files(os.path.join(REPO, "htmlcleanup_spark")):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            else:
+                continue
+            bad = [n for n in names if n.split(".")[0] == "pandas"
+                   or n in ("pandas_udf", "mapInPandas")]
+            if bad:
+                offenders.append("%s:%d %s" % (os.path.relpath(path, REPO),
+                                               node.lineno, bad[0]))
+    assert offenders == [], offenders
 
 
 def test_global_windows_only_where_documented(registry_plans):

@@ -146,6 +146,21 @@ def test_read_done_none_only_without_committed_output(spark, tmp_path):
     assert _read_done(spark, str(tmp_path / "partial")) is None
 
 
+def test_read_done_fresh_start_reads_nothing(spark, tmp_path, monkeypatch):
+    """A fresh output path is found empty by listing it, with no parquet
+    read: Spark logs a failed read of a missing path as an ERROR, which a
+    normal first run must not print."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from htmlcleanup_spark.plans.extract import _read_done
+
+    def no_read(self, *paths, **options):
+        raise AssertionError("read %s" % (paths,))
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert _read_done(spark, str(tmp_path / "absent")) is None
+
+
 def test_resume_over_corrupt_output_raises_and_appends_nothing(spark,
                                                                tmp_path):
     """A done set that cannot be read must stop the run: treating it as a
@@ -265,19 +280,22 @@ def test_merge_sink_ignores_uncommitted_snapshot(spark, tmp_path):
 
 
 def test_expire_snapshots_keeps_current_and_inflight(spark, tmp_path):
-    """After 3 merges, expire keep_last=1 must delete the two oldest
-    committed snapshots, keep the current one readable and correct, and
-    never touch an in-flight (_SUCCESS-less) dir."""
+    """Each merge expires all but the newest two committed snapshots, so 3
+    merges leave snap 1 and 2, and read_extracted returns the newest.  An
+    explicit expire keep_last=1 then deletes snap 1, keeps the current one
+    readable and correct, and never touches an in-flight (_SUCCESS-less)
+    dir."""
     import os
     import shutil
 
+    from htmlcleanup_spark.engine import clean_html
     from htmlcleanup_spark.plans.extract import (
         _current_snapshot,
         expire_snapshots,
         read_extracted,
         run_extract,
     )
-    from htmlcleanup_spark.sources.pages import synth_pages
+    from htmlcleanup_spark.sources.pages import make_html, synth_pages
 
     out = str(tmp_path / "out")
     for seed in (1, 2, 3):
@@ -287,13 +305,18 @@ def test_expire_snapshots_keeps_current_and_inflight(spark, tmp_path):
                     sink="merge")
     cur = _current_snapshot(spark, out)
     assert cur.endswith("snap-000002")
+    assert sorted(n for n in os.listdir(out) if n.startswith("snap-")) == [
+        "snap-000001", "snap-000002"]
+    row = read_extracted(spark, out).filter(
+        "url = 'https://host3.example/p/3'").first()
+    assert row.text == clean_html(make_html(3, 3)).text
     # simulate an in-flight writer above the current snapshot
     orphan = os.path.join(out, "snap-000003")
     shutil.copytree(cur, orphan)
     os.remove(os.path.join(orphan, "_SUCCESS"))
 
     deleted = expire_snapshots(spark, out, keep_last=1)
-    assert deleted == ["snap-000000", "snap-000001"]
+    assert deleted == ["snap-000001"]
     names = sorted(n for n in os.listdir(out) if n.startswith("snap-"))
     assert names == ["snap-000002", "snap-000003"]  # in-flight untouched
     assert _current_snapshot(spark, out) == cur

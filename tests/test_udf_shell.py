@@ -1,7 +1,8 @@
-"""Contract of the per-document shell (functions/udf.doc_map): nulls, empty
-batches, carried Arrow columns, DDL output types, the byte budget per
-Python call, the one-row-per-anchor outlinks expansion, and the
-once-per-worker import set-up (functions/udf.worker_once)."""
+"""Contract of the Arrow shell (functions/udf.doc_map and batch_map): nulls,
+empty batches, carried Arrow columns, DDL output types, the byte budget per
+Python call, embedding columns as matrices, the one-row-per-anchor
+outlinks expansion, and the once-per-worker import set-up
+(functions/udf.worker_once)."""
 
 from __future__ import annotations
 
@@ -10,10 +11,12 @@ import json
 import sys
 import zipfile
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
+    DoubleType,
     IntegerType,
     LongType,
     MapType,
@@ -22,7 +25,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from htmlcleanup_spark.functions.udf import _doc_kernel, doc_map, worker_once
+from htmlcleanup_spark.functions.udf import (
+    _batch_kernel,
+    _doc_kernel,
+    doc_map,
+    vectors,
+    worker_once,
+)
 
 OUT = to_arrow_schema(StructType([
     StructField("n", IntegerType()),
@@ -81,6 +90,46 @@ def test_kernel_calls_fn_on_slices_within_the_byte_budget(monkeypatch):
     seen = [b.column(1).to_pylist() for b in run(iter([batch]))]
     assert seen == [[10, 10, 10], [10], [40], [1]]
     assert all(len(s) == 1 or sum(s) <= 32 for s in seen)
+
+
+def test_batch_kernel_slices_within_the_byte_budget_and_carries(monkeypatch):
+    """batch_map's kernel hands fn whole slices of at most MAX_CALL_BYTES
+    of string/binary bytes (scaled down as above), reads an embedding
+    column as the matrix np.stack would build, and passes the carried
+    columns back as the same Arrow buffers."""
+    from htmlcleanup_spark.functions import udf
+
+    monkeypatch.setattr(udf, "MAX_CALL_BYTES", 32)
+    sizes = [10, 10, 10, 10, 40, 1]
+    vecs = [[float(i), 2.0 * i, 0.5] for i in range(len(sizes))]
+    batch = pa.record_batch(
+        [pa.array(range(len(sizes)), pa.int64()),
+         pa.array([b"x" * n for n in sizes], pa.binary()),
+         pa.array(vecs, pa.list_(pa.float32()))],
+        names=["id", "payload", "vec"],
+    )
+    seen = []
+
+    def fn(b):
+        seen.append([len(v) for v in b.column("payload").to_pylist()])
+        m = vectors(b.column("vec"))
+        assert np.array_equal(
+            m, np.stack([np.asarray(v) for v in b.column("vec").to_pylist()])
+            .astype(np.float64))
+        yield {"s": m.sum(axis=1)}
+
+    out = to_arrow_schema(StructType([StructField("s", DoubleType())]))
+    got = list(_batch_kernel(fn, ["id", "payload"], out)(iter([batch])))
+    assert seen == [[10, 10, 10], [10], [40], [1]]
+    assert [b.schema.names for b in got] == [["id", "payload", "s"]] * 4
+    for b in got:
+        for c in ("id", "payload"):
+            assert (b.column(c).buffers()[1].address
+                    == batch.column(c).buffers()[1].address)
+    assert pa.Table.from_batches(got).select(["id", "payload"]).equals(
+        pa.Table.from_batches([batch.select(["id", "payload"])]))
+    assert pa.Table.from_batches(got).column("s").to_pylist() == [
+        sum(v) for v in vecs]
 
 
 @pytest.mark.spark

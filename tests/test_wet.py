@@ -1,9 +1,6 @@
-"""WET export: conversion-record rendering and the write/read round trip."""
+"""WET/WAT export: conversion- and metadata-record rendering."""
 
 from __future__ import annotations
-
-import gzip
-import os
 
 from pyspark.sql import functions as F
 
@@ -33,41 +30,6 @@ def test_wet_record_shape_and_octet_length(spark):
         rec.encode("utf-8")
     )
     assert "Content-Length: 0\r\n" in out["https://c.example/z"].record
-
-
-def test_wet_round_trip_through_warc_reader(spark, tmp_path):
-    from htmlcleanup_spark.sources.wet import read_wet, write_wet
-
-    path = os.path.join(str(tmp_path), "wet")
-    pages = _pages(spark)
-    write_wet(pages.repartition(2), path)
-    # the sink wrote real gzip members
-    parts = [f for f in os.listdir(path) if f.startswith("part-")]
-    assert parts and all(f.endswith(".gz") for f in parts)
-    with open(os.path.join(path, parts[0]), "rb") as fh:
-        gzip.decompress(fh.read())  # valid gzip
-
-    back = read_wet(spark, path)
-    got = {(r.url, str(r.warc_ts), r.text) for r in back.collect()}
-    want = {
-        (r.url, str(r.warc_ts), r.text) for r in pages.collect()
-    }
-    assert got == want
-
-
-def test_wet_reader_ignores_response_records(spark, tmp_path):
-    """A WET read must not pick up response records mixed in a dir."""
-    from htmlcleanup_spark.sources.warc import write_synth_warc
-    from htmlcleanup_spark.sources.wet import read_wet, write_wet
-
-    path = os.path.join(str(tmp_path), "mixed")
-    write_wet(_pages(spark), path)
-    write_synth_warc(os.path.join(path, "part-resp.warc"), 3)
-    out = read_wet(spark, path, path_glob="part-*")
-    # 3 conversion records; the 3 response records are filtered by type
-    assert out.count() == 3
-    assert all(u.startswith("https://") for u in
-               [r.url for r in out.collect()])
 
 
 def test_wat_record_framing_and_json(spark):
